@@ -316,15 +316,13 @@ def _affine_base_hash(s):
     )
 
 
-def minhash_signature(
-    text_col: str, num_hashes: int, shingle: int, hash_scheme: str = "affine"
-):
+def minhash_signature(text_col: str, num_hashes: int, shingle: int):
     """Array of ``num_hashes`` minhash values, min over shingles per hash.
 
-    ``hash_scheme="affine"`` (default, the scale path): ONE md5 per shingle
-    -> 60-bit int -> ``num_hashes`` affine transforms (a_j*x + b_j) mod
-    2^31-1, all in whole-stage-codegen int64 arithmetic. The md5 scheme
-    pays num_hashes string-md5s PER SHINGLE — at 100 TB the signature scan
+    ONE md5 per shingle -> 60-bit int -> ``num_hashes`` affine transforms
+    (a_j*x + b_j) mod 2^31-1, all in whole-stage-codegen int64 arithmetic,
+    identically computable in DuckDB (exact oracles). A per-hash string-md5
+    family pays num_hashes md5s PER SHINGLE — at 100 TB the signature scan
     is hash-bound, so this is ~an order of magnitude less signature compute
     (and the sig is 16 longs, not 16 hex strings, shrinking the persisted
     barrier). MEASURED end-to-end at sf0.1 (54k short docs, 16c): affine
@@ -333,30 +331,11 @@ def minhash_signature(
     size.
     31-bit hash space is ample: P(collision within a doc) ~ n_shingles^2 /
     2^32, ~2e-4 at 1k shingles.
-
-    ``hash_scheme="md5"`` (legacy): min over md5(j || ':' || shingle) hex
-    strings. Both schemes are valid permutation families and identically
-    computable in DuckDB (exact oracles).
     """
-    return _sig_from_shingles(
-        _shingle_hashes(text_col, shingle), num_hashes, hash_scheme
-    )
+    return _sig_from_shingles(_shingle_hashes(text_col, shingle), num_hashes)
 
 
-def _sig_from_shingles(shingles, num_hashes: int, hash_scheme: str):
-    if hash_scheme == "md5":
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        shingles, lambda s, j=j: F.md5(F.concat(F.lit(f"{j}:"), s))
-                    )
-                )
-                for j in range(num_hashes)
-            ]
-        )
-    if hash_scheme != "affine":
-        raise ValueError(f"unknown hash_scheme: {hash_scheme!r}")
+def _sig_from_shingles(shingles, num_hashes: int):
     # Single-expression fold: per shingle ONE base md5 -> a 16-vector of
     # affine values -> element-wise min across shingles via aggregate +
     # zip_with. 16 separate array_min(transform(xs, ...)) columns would
@@ -384,8 +363,6 @@ def minhash_lsh_pairs(
     shingle: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    verify: str = "column",
-    hash_scheme: str = "affine",
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH, verified with exact shingle
     Jaccard (so the output has no false positives; recall is the LSH knob).
@@ -406,7 +383,7 @@ def minhash_lsh_pairs(
     ).persist()
     sigs = base.select(
         "id",
-        _sig_from_shingles(F.col("shingles"), num_hashes, hash_scheme).alias("sig"),
+        _sig_from_shingles(F.col("shingles"), num_hashes).alias("sig"),
     ).persist()
     # band index is folded into the bucket hash so distinct bands never
     # collide into one bucket key (keeps the candidate set identical to the
@@ -420,9 +397,8 @@ def minhash_lsh_pairs(
                         F.concat_ws(
                             "|",
                             F.lit(str(b)),
-                            # affine sigs are array<long>; cast renders plain
-                            # decimal, same as DuckDB array_to_string (no-op
-                            # for the md5 scheme's array<string>)
+                            # sigs are array<long>; cast renders plain
+                            # decimal, same as DuckDB array_to_string
                             F.slice("sig", b * rows_per_band + 1, rows_per_band).cast(
                                 "array<string>"
                             ),
@@ -445,51 +421,6 @@ def minhash_lsh_pairs(
     cand = cand.join(
         sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
     ).join(sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    if verify == "arrow":
-        # Arrow-batched exact-Jaccard kernel: Python set intersection per
-        # candidate pair instead of array_intersect + array_union. Rounding
-        # replicates Spark's round(x, 4) EXACTLY: Decimal(float) is the
-        # full binary expansion (same as Java's BigDecimal(double)), then
-        # HALF_UP at scale 4 — bit-identical to the Column path (parity
-        # test in test_text_and_dedup). MEASURED at sf0.1 (cold process,
-        # 256 pairs): column 10.7s, arrow 14.6s — the Arrow transfer of
-        # both shingle arrays outweighs the JVM intersect when candidates
-        # are few; the kernel only pays off when the candidate set is large
-        # relative to the corpus. Default stays "column".
-        from decimal import ROUND_HALF_UP, Decimal
-
-        from pyspark.sql.types import DoubleType, StructField, StructType
-
-        _Q = Decimal("0.0001")
-
-        id_type = docs.schema[id_col].dataType
-        out_schema = StructType(
-            [
-                StructField("id_a", id_type, True),
-                StructField("id_b", id_type, True),
-                StructField("jaccard", DoubleType(), True),
-            ]
-        )
-
-        def kern(it):
-            import pandas as pd
-
-            for pdf in it:
-                jac = []
-                for a, b in zip(pdf["sh_a"], pdf["sh_b"]):
-                    sa, sb = set(a), set(b)
-                    i = len(sa & sb)
-                    u = len(sa) + len(sb) - i
-                    jac.append(float(Decimal(i / u).quantize(_Q, ROUND_HALF_UP)))
-                yield pd.DataFrame(
-                    {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "jaccard": jac}
-                )
-
-        return (
-            cand.select("id_a", "id_b", "sh_a", "sh_b")
-            .mapInPandas(kern, out_schema)
-            .filter(F.col("jaccard") >= threshold)
-        )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     out = (

@@ -26,15 +26,16 @@ Scale notes (10^10-URL frontier, 1000 executors):
   * per-round state writes are append-only deltas; nothing rewrites O(seen);
   * extraction is Arrow-batched and partition-preserving (no shuffle);
   * lineage is truncated every round by reading state back from the snapshot;
-  * round metrics ride on ``DataFrame.observe`` — collected DURING the commit
-    writes, zero extra jobs per round (the reference's LOG row, A9).
+  * round counts (the reference's LOG row, A9) come from one footer-count job
+    over the committed tables; only the cosmetic dedup metric rides on
+    ``DataFrame.observe``, filled during the commit writes.
 """
 
 from __future__ import annotations
 
 import logging
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -43,7 +44,6 @@ from pyspark.sql import functions as F
 from ..functions.extract import extract_pages, extract_persons
 from ..functions.urls import url_shard
 from ..operators.frontier import (
-    anti_join_seen,
     anti_join_seen_chain,
     as_frontier_rows,
     dedup_frontier,
@@ -73,8 +73,6 @@ class CrawlConfig:
     n_shards: int = 32  # seen-set shard count (Iceberg bucket(N) analog)
     edge_type: str = UNTYPED_PARENT
     mode: str = "web"  # "web" (href links) | "persons" (GedcomX-parity JSON)
-    use_bloom: bool = False  # advisory seen-set pre-filter (correctness-free)
-    bloom_expected_per_shard: int = 100_000
     compact_every: int | None = 4  # rewrite seen as one snapshot every K
     # rounds (Iceberg compaction analog) so read fan-in stays bounded.
     # Cadence trades O(seen) rewrite volume against LSM probe-chain length
@@ -93,8 +91,8 @@ class CrawlConfig:
     #   10^10-URL budget-constrained frontier the full rewrite IS the
     #   per-round write bottleneck (the batch is a tiny fraction of the
     #   frontier); deltas are disjoint by construction (candidates are
-    #   anti-joined against the current frontier via the cached politeness
-    #   spool), so reconstruction needs no dedup and round counts stay exact.
+    #   anti-joined against the current frontier), so reconstruction needs
+    #   no dedup and round counts stay exact.
     #   A full frontier still lands every ``compact_every`` rounds (same
     #   cadence as seen compaction) to bound read fan-in.
     # auto: PER-ROUND choice — delta only when the frontier is much larger
@@ -115,38 +113,6 @@ class CrawlConfig:
     # shuffles. Measured at 16c/16M: the fetch stage drops 12.4s -> 5.1s.
     # With an UNpartitioned corpus the same hint would shuffle the whole
     # html-carrying corpus into hash maps (measured 66s) — hence opt-in.
-    frontier_pin: str = "off"  # persist the delta-mode frontier
-    # reconstruction once per round: "off" (lazy — consumers re-execute the
-    # (base ∪ adds) anti-join chain; each execution is a re-read of committed
-    # parquet the OS page cache already holds), "disk" (DISK_ONLY persist),
-    # or "memory" (MEMORY_AND_DISK). Measured at 16c/1M pages/budget=25
-    # (BENCH/BASELINE.md round-5 A/B): "off" wins — the per-round
-    # materialization barrier costs more than the re-executions it saves at
-    # these frontier sizes; revisit on a real cluster where the
-    # reconstruction's parquet re-reads cross a network filesystem.
-    seen_probe_cache: str = "disk"  # LSM probe-list storage for the seen
-    # anti-join: "disk" (DISK_ONLY — pre-partitioned/sorted parts stream from
-    # local disk through the OS page cache; zero heap pressure, the right
-    # trade when the pages corpus already fills storage memory), "memory"
-    # (MEMORY_AND_DISK — fastest when heap is plentiful), or "off" (flat
-    # union-read probe, the pre-LSM shape). Whatever the level, chained
-    # anti-joins plan with zero exchange/sort on the seen side.
-    eager_round_cache: bool = False  # materialize parsed/batch/spool in ONE
-    # job before the commit's 5 concurrent writes. The racing write jobs do
-    # serialize on the block-manager's per-partition compute locks while the
-    # first one fills the caches (profiled: write stages with 20-47 s of
-    # summed task RUN time vs ~1 s CPU — parked slots), but an interleaved
-    # same-session A/B at 32c/100k pages (9 runs) measured min lazy 48.5 s
-    # vs min eager 52.8 s: with 5x32 tasks oversubscribing 32 cores the
-    # parked slots are back-filled anyway, and the extra job per round costs
-    # more than the locks. DEFAULT OFF (round-5 shape); the knob stays for
-    # clusters where executor slots are not oversubscribed.
-    aqe_in_loop: bool = False  # AQE re-plans every stage of every job — pure
-    # driver latency on the iterative path (measured 26% of wall at 16 cores,
-    # 8M pages), and redundant here: the loop's skew risk (hot hosts) is
-    # handled EXPLICITLY by politeness salting, and its join keys (md5 url
-    # hashes) are uniform. Restored after the loop; analytics queries keep AQE.
-    extra: dict[str, Any] = field(default_factory=dict)
 
 
 class RoundPlan(NamedTuple):
@@ -179,10 +145,7 @@ def _committed_counts(
     leg: next round's politeness host stats — (#hosts, #hosts over budget) of
     the next frontier, exploded into two (t, n) rows off a single scan. This
     folds select_batch's eager shape-picking aggregate into the SAME job
-    (one job per round instead of two), and — in delta frontier mode, where
-    ``frontier_next`` is the freshly persisted multi-round reconstruction —
-    materializes that cache as a side effect, so no later consumer ever
-    re-executes the reconstruction.
+    (one job per round instead of two).
 
     ``materialize`` (optional) rides one more count leg over a persisted
     DataFrame purely to populate its cache inside this job — the loop
@@ -238,8 +201,6 @@ def _committed_counts(
     for df in legs[1:]:
         u = u.unionByName(df)
     return {r["t"]: int(r["n"]) for r in u.collect()}
-
-
 
 
 def _load_frontier(spark: SparkSession, store, up_to_round: int) -> DataFrame:
@@ -303,7 +264,6 @@ def crawl_round(
     round_i: int,
     cfg: CrawlConfig,
     observations: dict[str, Observation] | None = None,
-    bloom_shards: DataFrame | None = None,
     seen_parts: list[DataFrame] | None = None,
     fetcher: Fetcher | None = None,
     host_stats: tuple[int, int] | None = None,
@@ -449,24 +409,7 @@ def crawl_round(
         ]
     else:
         probes = [batch_seen.select("url_hash", "url")]
-    if bloom_shards is not None:
-        # Advisory pre-prune: candidates the filter says are definitely-new
-        # skip the exact anti-join; "maybe seen" rows still go through it, so
-        # correctness never depends on the false-positive rate. The filter
-        # covers rounds < round_i; this round's batch is always probed exactly.
-        # bloom_shards is the blob DATAFRAME — probed via cogroup on shard,
-        # never collected or broadcast through the driver.
-        from ..operators.bloom import bloom_prefilter
-
-        flags = bloom_prefilter(raw_candidates, bloom_shards, cfg.n_shards)
-        flagged = raw_candidates.join(flags, on=["url_hash", "url"], how="inner")
-        definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe_seen = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        unseen = definite_new.unionByName(anti_join_seen_chain(maybe_seen, probes))
-        # definite-new rows still must not collide with THIS round's batch
-        unseen = anti_join_seen(unseen, batch_seen.select("url_hash", "url"))
-    else:
-        unseen = anti_join_seen_chain(raw_candidates, probes)
+    unseen = anti_join_seen_chain(raw_candidates, probes)
 
     candidates = robots_gate(unseen, robots)
     if "candidates" in obs:
@@ -533,9 +476,13 @@ def run_crawl(
     store = store or CheckpointStore(checkpoint_dir)
     fetcher = fetcher or CorpusJoinFetcher(pages, cfg.pages_url_partitioned)
 
+    # AQE off inside the loop: it re-plans every stage of every job — pure
+    # driver latency on the iterative path (measured 26% of wall at 16 cores,
+    # 8M pages), and redundant here: the loop's skew risk (hot hosts) is
+    # handled EXPLICITLY by politeness salting, and its join keys (md5 url
+    # hashes) are uniform. Restored after the loop; analytics queries keep AQE.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if not cfg.aqe_in_loop:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     cached: list[DataFrame] = []  # every probe part the loop persists
     try:
         return _run_crawl_loop(
@@ -589,19 +536,14 @@ def _run_crawl_loop(
     # pre-partitioned + pre-sorted on the anti-join keys, so the per-round
     # F1 probe never re-shuffles the accumulated seen set (see
     # anti_join_seen_chain). List length is bounded by the compaction cadence
-    # (a compaction round collapses it to one entry). DISK_ONLY by default
-    # (seen_probe_cache='disk' — BASELINE.md records the cache-eviction
-    # storms that rejected the memory level); parts are materialized eagerly
-    # (one tiny job per round) so the commit's concurrent writes never race
-    # on cache population, and every part is unpersisted on exit.
+    # (a compaction round collapses it to one entry). Parts are DISK_ONLY —
+    # BENCH/BASELINE.md records the cache-eviction storms that rejected
+    # MEMORY_AND_DISK next to a cached pages corpus. Each round's part is
+    # filled by that round's counts job (no job of its own), so the next
+    # round's anti-joins read a populated cache; every part is unpersisted
+    # on exit.
     probe_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    probe_cache = cfg.seen_probe_cache != "off"
-    seen_parts: list[DataFrame] | None = [] if probe_cache else None
-    cache_level = (
-        StorageLevel.MEMORY_AND_DISK
-        if cfg.seen_probe_cache == "memory"
-        else StorageLevel.DISK_ONLY
-    )
+    seen_parts: list[DataFrame] = []
     probe_n_warned = False
 
     def _as_part(df: DataFrame, materialize: bool = True) -> DataFrame:
@@ -609,49 +551,12 @@ def _run_crawl_loop(
             df.select("url_hash", "url")
             .repartition(probe_n, "url_hash", "url")
             .sortWithinPartitions("url_hash", "url")
-            .persist(cache_level)
+            .persist(StorageLevel.DISK_ONLY)
         )
         cached.append(part)
         if materialize:
             part.count()
         return part
-
-    # Delta-mode frontier pin (cfg.frontier_pin): optionally persist the
-    # reconstructed frontier (base ∪ adds anti-join seen-deltas — a
-    # multi-round plan consumed several times per round) so consumers don't
-    # re-execute it; the committed-counts job materializes it before the
-    # commit's concurrent writes race on it. DEFAULT OFF: the round-5 A/B
-    # (BENCH/BASELINE.md) measured the per-round materialization barrier
-    # costing more than the re-executions it saves (the re-reads hit
-    # committed parquet through the OS page cache). Full-frontier rounds
-    # read committed parquet directly — never pinned.
-    pin_level = (
-        None
-        if cfg.frontier_pin == "off"
-        else (
-            StorageLevel.MEMORY_AND_DISK
-            if cfg.frontier_pin == "memory"
-            else StorageLevel.DISK_ONLY
-        )
-    )
-    frontier_pin: DataFrame | None = None
-
-    def _pin(df: DataFrame) -> DataFrame:
-        nonlocal frontier_pin
-        if pin_level is None:
-            return df
-        pinned = df.persist(pin_level)
-        cached.append(pinned)
-        frontier_pin = pinned
-        return pinned
-
-    def _unpin() -> None:
-        nonlocal frontier_pin
-        if frontier_pin is not None:
-            frontier_pin.unpersist()
-            pin = frontier_pin
-            cached[:] = [c for c in cached if c is not pin]
-            frontier_pin = None
 
     latest = store.latest_round()
     if latest is not None:
@@ -663,43 +568,13 @@ def _run_crawl_loop(
         if rollback is not None:
             rollback()
         frontier = _load_frontier(spark, store, latest)
-        if not store.manifest(latest).get("meta", {}).get("frontier_full", True):
-            frontier = _pin(frontier)
         seen = store.read_union(spark, "seen", up_to_round=latest)
-        if probe_cache:
-            seen_parts = [_as_part(seen)]
+        seen_parts = [_as_part(seen)]
         start_round = latest + 1
     else:
         frontier = seed_frontier(spark, seeds)
         seen = None
         start_round = 0
-
-    # Bloom state is a blob DataFrame persisted per round next to the
-    # snapshot — on resume it reloads from the last round's parquet; on a
-    # cold resume without one it rebuilds from the seen union. Never
-    # collected to the driver. Reload VALIDATES the persisted parameters
-    # (n_shards from the manifest settings, m/k from the blob rows) against
-    # cfg: a mismatch — e.g. a resume with a different n_shards would hash
-    # seen urls into shards with no blob row, flag them definitely-new, and
-    # silently re-fetch — falls back to rebuilding from the seen union.
-    bloom_shards: DataFrame | None = None
-    if cfg.use_bloom and seen is not None:
-        from ..operators.bloom import _params, build_bloom_shards
-
-        try:
-            prev = store.manifest(latest).get("meta", {}).get("settings", {})
-            if prev.get("n_shards") == cfg.n_shards:
-                cand = store.aux_read(spark, latest, "bloom")
-                head = cand.select("m", "k").limit(1).collect()
-                m_exp, k_exp = _params(cfg.bloom_expected_per_shard, 0.01)
-                if head and head[0]["m"] == m_exp and head[0]["k"] == k_exp:
-                    bloom_shards = cand
-        except Exception:
-            bloom_shards = None
-        if bloom_shards is None:
-            bloom_shards = build_bloom_shards(
-                seen, cfg.n_shards, cfg.bloom_expected_per_shard
-            )
 
     rounds_run = 0
     total_fetched = 0
@@ -754,7 +629,7 @@ def _run_crawl_loop(
             urls_in = frontier.count()
         if urls_in == 0:
             break
-        if probe_cache and not probe_n_warned:
+        if not probe_n_warned:
             cur_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
             if cur_n != probe_n:
                 # results stay correct, but every cached probe part was laid
@@ -777,25 +652,19 @@ def _run_crawl_loop(
             for name in ("raw_candidates", "candidates")
         }
         plan = crawl_round(
-            pages, frontier, seen, robots, round_i, cfg, obs, bloom_shards,
+            pages, frontier, seen, robots, round_i, cfg, obs,
             seen_parts=seen_parts, fetcher=fetcher, host_stats=host_stats,
         )
+        # Shared by several of the commit's concurrent writes, so each is
+        # computed once. The racing writes fill these caches lazily: an
+        # eager fill job before the commit lost its A/B (min 52.8 s vs
+        # 48.5 s lazy, 32 cores / 100k pages) — the extra job per round
+        # cost more than the block-manager lock waits it saved.
         parsed = plan.parsed.persist()
         batch = plan.batch.persist()
         # the politeness rank-1 pass is shared by the batch path AND the
         # deferred path (frontier write); pin it so neither recomputes it
         spool = plan.spool.persist() if plan.spool is not None else None
-        # Materialize the shared round state in ONE job BEFORE the commit's
-        # concurrent writes. Without this, the 5 racing write jobs all hit
-        # the unpopulated parsed/batch/spool caches at once and serialize on
-        # the block-manager's per-partition compute locks — profiled as
-        # write stages with sum(task run time) 20-47 s against ~1 s of CPU
-        # (slots parked waiting on another job's cache fill). Evaluating
-        # parsed pulls batch (and spool, via the politeness split) through
-        # their persists as a side effect, so one count warms all three and
-        # the writes become IO-bound and genuinely parallel.
-        if cfg.eager_round_cache:
-            parsed.count()
         snapshot_id = time.time_ns()
 
         # Per-partition lineage (north_rule): rows per partition of this
@@ -891,8 +760,6 @@ def _run_crawl_loop(
                     "salt_n": cfg.salt_n,
                     "n_shards": cfg.n_shards,
                     "mode": cfg.mode,
-                    "use_bloom": cfg.use_bloom,
-                    "bloom_expected_per_shard": cfg.bloom_expected_per_shard,
                     "seeds": seeds,
                 },
             },
@@ -901,14 +768,13 @@ def _run_crawl_loop(
         )
         # Next round's frontier (lineage truncation + exact resume
         # equivalence: read back from the committed snapshot, not in-memory
-        # lineage), loaded BEFORE the counts job. Delta mode pins the
-        # multi-round reconstruction so the counts job materializes the
-        # cache and no later consumer re-executes it.
-        _unpin()
+        # lineage). Delta mode rebuilds it lazily from committed parquet
+        # (base ∪ adds anti-join seen deltas); its consumers re-execute
+        # that plan — persisting it lost the round-5 A/B (BENCH/BASELINE.md).
         frontier_next = (
             store.read(spark, round_i, "frontier")
             if frontier_full
-            else _pin(_load_frontier(spark, store, round_i))
+            else _load_frontier(spark, store, round_i)
         )
 
         # Next round's LSM probe part (this round's committed seen delta,
@@ -916,11 +782,7 @@ def _run_crawl_loop(
         # and MATERIALIZED BY THE COUNTS JOB below — folding what used to
         # be a dedicated per-round cache-fill job (+ scheduling gap) into
         # the one job the loop already pays.
-        next_part: DataFrame | None = None
-        if probe_cache:
-            next_part = _as_part(
-                store.read(spark, round_i, "seen"), materialize=False
-            )
+        next_part = _as_part(store.read(spark, round_i, "seen"), materialize=False)
 
         # Loop-control and logged counts come from the COMMITTED parquet —
         # one job for all of them (table count() legs read parquet footers
@@ -990,34 +852,17 @@ def _run_crawl_loop(
         seen = store.read_union(spark, "seen", up_to_round=round_i)
         # LSM probe-list maintenance: append this round's committed delta;
         # a compaction round collapses the list to the one full snapshot.
-        if probe_cache:
-            if compaction_round:
-                for p in seen_parts:
-                    p.unpersist()
-                # identity-filter (DataFrame __eq__ builds a Column, no `in`)
-                cached[:] = [
-                    c for c in cached if all(c is not p for p in seen_parts)
-                ]
-                seen_parts = [next_part]
-            else:
-                seen_parts.append(next_part)
-            lsm_msg = _lsm_length_warning(len(seen_parts), cfg.compact_every)
-            if lsm_msg:
-                logger.warning(lsm_msg)
-        if cfg.use_bloom:
-            from ..operators.bloom import build_bloom_shards, merge_bloom_shards
-
-            delta_blobs = build_bloom_shards(
-                store.read(spark, round_i, "seen"),
-                cfg.n_shards,
-                cfg.bloom_expected_per_shard,
-            )
-            merged = merge_bloom_shards(bloom_shards, delta_blobs)
-            # materialize the merged blobs next to the snapshot: truncates
-            # the OR-chain lineage across rounds and gives resume a filter
-            # to reload instead of rebuilding from the whole seen-set
-            store.aux_write(round_i, "bloom", merged)
-            bloom_shards = store.aux_read(spark, round_i, "bloom")
+        if compaction_round:
+            for p in seen_parts:
+                p.unpersist()
+            # identity-filter (DataFrame __eq__ builds a Column, no `in`)
+            cached[:] = [c for c in cached if all(c is not p for p in seen_parts)]
+            seen_parts = [next_part]
+        else:
+            seen_parts.append(next_part)
+        lsm_msg = _lsm_length_warning(len(seen_parts), cfg.compact_every)
+        if lsm_msg:
+            logger.warning(lsm_msg)
         if cfg.csv_dir:
             from ..sources.csv_compat import CrawlCsvAppender
 

@@ -105,18 +105,10 @@ class CheckpointStore:
         os.rename(tmp, os.path.join(final, MANIFEST))
         return snapshot_id
 
-    # -- aux blobs (side state next to a committed round: bloom shards,
-    # piggybacked log appends). NOT part of the atomic commit — callers must
-    # tolerate absence (bloom rebuilds from seen; totals re-derive). ---------
-    def aux_write(self, round_i: int, name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(self._round_dir(round_i), name))
-
-    def aux_read(self, spark: SparkSession, round_i: int, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._round_dir(round_i), name))
-
     def append(self, round_i: int, name: str, df: DataFrame) -> None:
         """Append rows to an already-committed table of ``round_i`` (used for
-        the final round's totals flush)."""
+        the final round's totals flush). NOT part of the atomic commit — a
+        crash before it loses the totals row, which resume re-derives."""
         df.write.mode("append").parquet(os.path.join(self._round_dir(round_i), name))
 
     # -- read path ----------------------------------------------------------

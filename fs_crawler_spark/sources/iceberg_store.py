@@ -2,7 +2,7 @@
 tables") — the production backend the parquet ``CheckpointStore`` models.
 
 Same surface as ``CheckpointStore`` (commit / read / read_union / manifest /
-committed_rounds / latest_round / aux_* / append), so ``run_crawl(...,
+committed_rounds / latest_round / append), so ``run_crawl(...,
 store=IcebergCheckpointStore(spark, "cat.crawl_ns"))`` is a drop-in swap.
 Mapping:
 
@@ -48,7 +48,6 @@ import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .iceberg_backend import SparkIcebergBackend
 
@@ -226,15 +225,6 @@ class IcebergCheckpointStore:
         )
         mode = "append" if self._exists(MANIFEST_TABLE) else "create"
         self.backend.write(self._tbl(MANIFEST_TABLE), row_df, mode)  # commit point
-
-    # -- aux blobs -------------------------------------------------------------
-    def aux_write(self, round_i: int, name: str, df: DataFrame) -> None:
-        out = df.withColumn("_round", F.lit(round_i).cast("int"))
-        self.backend.write(self._tbl(f"aux_{name}"), out, "createOrReplace")
-
-    def aux_read(self, spark: SparkSession, round_i: int, name: str) -> DataFrame:
-        df = self.backend.read(self._tbl(f"aux_{name}"))
-        return df.filter(F.col("_round") == round_i).drop("_round")
 
     def append(self, round_i: int, name: str, df: DataFrame) -> None:
         """Post-commit append to an already-committed round's table (the final

@@ -81,7 +81,7 @@ def _read_optional(spark: SparkSession, path: str, ddl: str) -> DataFrame | None
         # ONLY "first batch: nothing committed yet" is recoverable. A corrupt
         # or unreadable seen dir must fail loudly — treating it as absent
         # would skip the seen anti-join and silently re-crawl everything.
-        if "PATH_NOT_FOUND" not in str(e):
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return None
 

@@ -30,21 +30,11 @@ def main() -> None:
     p.add_argument("--host-budget", type=int, default=None)
     p.add_argument("--mode", choices=["web", "persons"], default="web")
     p.add_argument("--n-shards", type=int, default=256)
-    p.add_argument("--use-bloom", action="store_true")
     p.add_argument("--robots", default=None, help="parquet path: (host, disallow_prefix)")
     p.add_argument("--resolve", action="store_true", help="run lazy A4 resolution after the crawl")
     p.add_argument(
         "--frontier-mode", choices=["auto", "rewrite", "delta"], default="auto",
         help="per-round frontier commit: full rewrite vs disjoint new-url delta",
-    )
-    p.add_argument(
-        "--seen-probe-cache", choices=["disk", "memory", "off"], default="disk",
-        help="LSM probe-list storage for the seen anti-join (see CrawlConfig)",
-    )
-    p.add_argument(
-        "--frontier-pin", choices=["off", "disk", "memory"], default="off",
-        help="persist the delta-mode frontier reconstruction per round "
-        "(default off — see CrawlConfig.frontier_pin measurement notes)",
     )
     p.add_argument(
         "--pages-url-partitioned", action="store_true",
@@ -73,10 +63,7 @@ def main() -> None:
         host_budget=args.host_budget,
         mode=args.mode,
         n_shards=args.n_shards,
-        use_bloom=args.use_bloom,
         frontier_mode=args.frontier_mode,
-        frontier_pin=args.frontier_pin,
-        seen_probe_cache=args.seen_probe_cache,
         pages_url_partitioned=args.pages_url_partitioned,
     )
     res = run_crawl(spark, pages, args.seeds, args.checkpoint, cfg, robots=robots)

@@ -7,8 +7,6 @@ from fs_crawler_spark.operators.bloom import (
     build_bloom_shards,
     merge_bloom_shards,
 )
-from fs_crawler_spark.plans.crawl import CrawlConfig, read_output, run_crawl
-from fs_crawler_spark.sources.corpus import build_pages, doc_url
 
 
 def test_bloom_no_false_negatives(spark):
@@ -46,24 +44,3 @@ def test_bloom_merge(spark):
     fresh = spark.createDataFrame([("u3", 2), ("u4", 3)], "url string, url_hash long")
     fresh_flags = bloom_prefilter(fresh, merged, n_shards=4)
     assert fresh_flags.count() == 2
-
-
-def test_crawl_with_bloom_identical(spark, sf_dir, tmp_path):
-    pages = build_pages(spark, sf_dir, limit_docs=120).cache()
-    plain_dir = str(tmp_path / "plain")
-    bloom_dir = str(tmp_path / "bloom")
-    run_crawl(
-        spark, pages, [doc_url(0)], plain_dir, CrawlConfig(max_rounds=5, n_shards=8)
-    )
-    run_crawl(
-        spark,
-        pages,
-        [doc_url(0)],
-        bloom_dir,
-        CrawlConfig(max_rounds=5, use_bloom=True, n_shards=8),
-    )
-    for table in ("vertices", "seen", "edges"):
-        a = sorted(map(tuple, read_output(spark, plain_dir, table).collect()))
-        b = sorted(map(tuple, read_output(spark, bloom_dir, table).collect()))
-        assert a == b, table
-    pages.unpersist()

@@ -163,31 +163,6 @@ def test_resume_rederives_lost_totals(spark, pages120, tmp_path):
     assert totals[1]["duration"] == 0.0  # unrecoverable, zeroed
 
 
-def test_bloom_resume_param_mismatch_rebuilds(spark, pages120, tmp_path):
-    """Resuming with a different n_shards must NOT silently re-fetch seen
-    urls (blobs keyed by old shards would flag everything definitely-new):
-    the reload validates params against the manifest and rebuilds."""
-    plain = str(tmp_path / "plain")
-    run_crawl(spark, pages120, [doc_url(0)], plain, CrawlConfig(max_rounds=4))
-
-    d = str(tmp_path / "b")
-    run_crawl(
-        spark, pages120, [doc_url(0)], d,
-        CrawlConfig(max_rounds=2, use_bloom=True, n_shards=8),
-    )
-    run_crawl(
-        spark, pages120, [doc_url(0)], d,
-        CrawlConfig(max_rounds=4, use_bloom=True, n_shards=4),
-    )
-    for table in ("vertices", "edges"):
-        a = sorted(map(tuple, read_output(spark, plain, table).collect()))
-        b = sorted(map(tuple, read_output(spark, d, table).collect()))
-        assert a == b, table
-    # fetch-exactly-once invariant: no url appears twice
-    v = read_output(spark, d, "vertices")
-    assert v.count() == v.select("id").distinct().count()
-
-
 def test_frontier_delta_mode_identical_and_resumable(spark, pages120, tmp_path):
     """Delta-frontier commits (auto under a host budget) must produce
     byte-identical tables and crawl ordering vs full rewrites, and resume
@@ -240,28 +215,3 @@ def test_frontier_delta_mode_identical_and_resumable(spark, pages120, tmp_path):
         a = sorted(map(tuple, read_output(spark, rw, table).collect()))
         b = sorted(map(tuple, read_output(spark, res, table).collect()))
         assert a == b, f"resume {table}"
-
-
-def test_frontier_pin_modes_identical(spark, pages120, tmp_path):
-    """frontier_pin is a pure performance knob: delta-mode outputs must be
-    identical with and without the per-round reconstruction persist."""
-    from fs_crawler_spark.plans.crawl import read_output
-
-    outs = {}
-    for pin in ("off", "disk"):
-        ck = str(tmp_path / pin)
-        run_crawl(
-            spark,
-            pages120,
-            [doc_url(0)],
-            ck,
-            CrawlConfig(
-                max_rounds=30, host_budget=5,
-                frontier_mode="delta", frontier_pin=pin,
-            ),
-        )
-        outs[pin] = {
-            name: sorted(map(tuple, read_output(spark, ck, name).collect()))
-            for name in ("vertices", "edges", "seen")
-        }
-    assert outs["off"] == outs["disk"]

@@ -203,17 +203,6 @@ def test_connected_components_chain_and_cliques(spark):
                    20: 20, 21: 20, 22: 20, 30: 30, 31: 30}
 
 
-def test_minhash_verify_kernel_parity(spark, sf_dir):
-    """The Arrow exact-Jaccard verify kernel must be bit-identical to the
-    Column (array_intersect/array_union + HALF_UP round) path."""
-    from fs_crawler_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = set(map(tuple, minhash_lsh_pairs(docs, threshold=0.2, verify="column").collect()))
-    b = set(map(tuple, minhash_lsh_pairs(docs, threshold=0.2, verify="arrow").collect()))
-    assert a == b and len(a) > 0
-
-
 def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
     """checkpoint_dir switches per-round state from localCheckpoint to a
     reliable checkpoint (fault-tolerant cluster mode); labels identical."""
