@@ -73,8 +73,7 @@ def select_batch(
     ``host_stats=(n_hosts, n_over)`` supplies the two ints from outside and
     skips the eager aggregate entirely — the crawl loop computes them as two
     extra legs of its per-round committed-counts job (one job instead of
-    two, and never against an unpersisted multi-round delta-frontier
-    reconstruction). Standalone callers omit it and pay the one small
+    two). Standalone callers omit it and pay the one small
     aggregate; the frontier they pass is either a committed-parquet read or
     a caller-persisted DataFrame, so the job is a map-side-combined count —
     tiny next to the two full broadcast-join passes the blind split always

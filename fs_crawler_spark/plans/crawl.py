@@ -76,31 +76,11 @@ class CrawlConfig:
     compact_every: int | None = 4  # rewrite seen as one snapshot every K
     # rounds (Iceberg compaction analog) so read fan-in stays bounded.
     # Cadence trades O(seen) rewrite volume against LSM probe-chain length
-    # (each chained anti-join is one sorted candidate pass) and frontier-
-    # reconstruction fan-in (union legs since the last full snapshot).
+    # (each chained anti-join is one sorted candidate pass).
     # Round-6 sf1.0 A/B: 8 -> 4 was worth ~10% of crawl wall here, where
     # the full-seen rewrite (<= 1M rows) is cheap next to the chain; at a
     # 10^10-url seen set the rewrite dominates and the cadence should grow
     # (Iceberg's rewrite_data_files scheduling makes the same trade).
-    frontier_mode: str = "auto"  # "rewrite" | "delta" | "auto".
-    # rewrite: commit the FULL new frontier every round — O(frontier) parquet
-    #   per round, fine when the frontier drains every round (no budget).
-    # delta: commit only this round's NEW urls; the frontier is reconstructed
-    #   as (last full frontier ∪ deltas since) anti-join (seen deltas since) —
-    #   per-round durable writes drop from O(frontier) to O(new urls). At a
-    #   10^10-URL budget-constrained frontier the full rewrite IS the
-    #   per-round write bottleneck (the batch is a tiny fraction of the
-    #   frontier); deltas are disjoint by construction (candidates are
-    #   anti-joined against the current frontier), so reconstruction needs
-    #   no dedup and round counts stay exact.
-    #   A full frontier still lands every ``compact_every`` rounds (same
-    #   cadence as seen compaction) to bound read fan-in.
-    # auto: PER-ROUND choice — delta only when the frontier is much larger
-    #   than the previous round's batch (urls_in > 4x prev batch, i.e. the
-    #   rewrite would mostly re-copy deferred rows) and a budget is set;
-    #   measured at bench scale: always-delta is a net loss on small
-    #   frontiers (extra anti-join stages + delta read fan-in), a net win
-    #   when deferred >> batch.
     csv_dir: str | None = None  # per-round reference-CSV appends (the
     # GraphWriter.end_iteration cadence) — opt-in; see CrawlCsvAppender
     csv_basename: str = "graph"
@@ -203,43 +183,21 @@ def _committed_counts(
     return {r["t"]: int(r["n"]) for r in u.collect()}
 
 
-def _load_frontier(spark: SparkSession, store, up_to_round: int) -> DataFrame:
-    """The frontier as of AFTER ``up_to_round``, from committed state only
-    (lineage-truncating read-back, both frontier modes).
+def _load_frontier(spark: SparkSession, store, round_i: int) -> DataFrame:
+    """The frontier as of AFTER ``round_i``: the whole frontier that round
+    committed (a lineage-truncating read-back of committed state).
 
-    Rounds whose manifest says ``frontier_full`` (every rewrite-mode round,
-    delta-mode compaction rounds, and legacy manifests without the key)
-    committed the complete frontier; later delta rounds committed disjoint
-    additions, and their seen deltas are the tombstones for rows fetched (or
-    robots-blocked) since the base. Reconstruction is
-        (base ∪ adds) LEFT ANTI JOIN (seen deltas since base)
-    — no dedup needed: deltas are written disjoint from the then-current
-    frontier and from each other (a re-discovered url is either still in the
-    frontier, or in seen)."""
-    rounds = [r for r in store.committed_rounds() if r <= up_to_round]
-    base = None
-    for r in rounds:
-        if store.manifest(r).get("meta", {}).get("frontier_full", True):
-            base = r
-    if base is None:  # no full frontier yet: fresh delta-mode crawl
-        base = -1
-        f = None
-    else:
-        f = store.read(spark, base, "frontier")
-    tomb = None
-    for r in rounds:
-        if r <= base:
-            continue
-        add = store.read(spark, r, "frontier")
-        f = add if f is None else f.unionByName(add)
-        s = store.read(spark, r, "seen").select("url_hash", "url")
-        tomb = s if tomb is None else tomb.unionByName(s)
-    if f is None:
-        raise FileNotFoundError(f"no committed frontier under {store.root}")
-    if tomb is not None:
-        cols = f.columns  # the join moves key columns first; keep the schema
-        f = f.join(tomb, on=["url_hash", "url"], how="left_anti").select(*cols)
-    return f
+    Checkpoints written by older builds with delta frontier commits can hold
+    rounds whose manifest says ``frontier_full: false``: their frontier table
+    is only that round's new urls, and reading it as the whole frontier
+    would silently drop the rest, so such a round is refused."""
+    if not store.manifest(round_i).get("meta", {}).get("frontier_full", True):
+        raise ValueError(
+            f"round {round_i} under {store.root} committed a delta frontier "
+            "(frontier_full=false); only whole-frontier checkpoints can be "
+            "read"
+        )
+    return store.read(spark, round_i, "frontier")
 
 
 def load_frontier(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
@@ -469,9 +427,7 @@ def run_crawl(
     catalog is configured — same commit/read surface).
 
     ``fetcher`` overrides the fetch seam (default: corpus join — see
-    sources/fetcher.py). A ``may_retry`` fetcher forces full frontier
-    snapshots: delta-frontier round accounting assumes every batch url
-    leaves the frontier, which retried urls violate."""
+    sources/fetcher.py)."""
     cfg = cfg or CrawlConfig()
     store = store or CheckpointStore(checkpoint_dir)
     fetcher = fetcher or CorpusJoinFetcher(pages, cfg.pages_url_partitioned)
@@ -525,11 +481,6 @@ def _run_crawl_loop(
     cached: list[DataFrame],
     fetcher: Fetcher,
 ) -> dict[str, Any]:
-    delta_allowed = not fetcher.may_retry and (
-        cfg.frontier_mode == "delta"
-        or (cfg.frontier_mode == "auto" and cfg.host_budget is not None)
-    )
-
     from pyspark import StorageLevel
 
     # LSM-style seen probe list: each round's committed seen delta is cached
@@ -583,38 +534,29 @@ def _run_crawl_loop(
     # produces, so round r's totals PIGGYBACK on round r+1's crawl_log write
     # (zero extra jobs); the final round's totals flush once after the loop.
     pending_totals: list[tuple] = []
-    prev_batch_n: int | None = None  # feeds the auto frontier-mode heuristic
     if latest is not None:
         # A crash between round `latest`'s commit and the next one loses
         # exactly that round's totals row (it would have piggybacked on the
         # next commit). Re-derive it from the committed counts so the log
         # export never silently skews cumulative counts. Duration and the
-        # dedup metric are unrecoverable -> 0.
-        try:
-            has_totals = (
-                store.read(spark, latest, "crawl_log")
-                .filter(
-                    (F.col("partition_id") == -1) & (F.col("iteration") == latest)
-                )
-                .limit(1)
-                .count()
-                > 0
-            )
-        except Exception:
-            has_totals = False
+        # dedup metric are unrecoverable -> 0. Every committed round wrote
+        # crawl_log inside its atomic commit, so a failing read is a fault.
+        has_totals = (
+            store.read(spark, latest, "crawl_log")
+            .filter((F.col("partition_id") == -1) & (F.col("iteration") == latest))
+            .limit(1)
+            .count()
+            > 0
+        )
         if not has_totals:
             stats = _committed_counts(spark, store, latest)
-            if store.manifest(latest).get("meta", {}).get("frontier_full", True):
-                n_front = int(stats["frontier"])
-            else:  # committed table is a delta; count the reconstruction
-                n_front = frontier.count()
             pending_totals.append(
                 (
                     latest,
                     -1,
                     0.0,
                     int(stats["vertices"]),
-                    n_front,
+                    int(stats["frontier"]),
                     int(stats["edges"]),
                     int(stats["batch"]),
                     int(stats["vertices"]),
@@ -709,40 +651,14 @@ def _run_crawl_loop(
             )
             compacted = ["seen"]
 
-        # Frontier commit: full rewrite, or (delta mode) only this round's
-        # NEW urls — disjoint from the current frontier via an anti-join
-        # against the cached politeness spool, so reconstruction needs no
-        # dedup and |next frontier| = urls_in - batch + delta exactly.
-        # Full frontiers land on seen-compaction rounds to bound read fan-in.
-        delta_this_round = delta_allowed and not (
-            cfg.frontier_mode == "auto"
-            and (prev_batch_n is None or urls_in <= 4 * prev_batch_n)
-        )
-        frontier_full = (not delta_this_round) or compaction_round
-        seeds_in_delta = False
-        if frontier_full:
-            frontier_out = plan.new_frontier
-        else:
-            # disjointness vs the CURRENT frontier (re-adds of still-queued
-            # urls): anti-join against the committed-parquet-backed frontier
-            # itself (the politeness spool only covers over-budget hosts)
-            cand_new = plan.candidates.join(
-                frontier.select("url_hash", "url"),
-                on=["url_hash", "url"],
-                how="left_anti",
-            )
-            seeds_in_delta = round_i == start_round and latest is None
-            if seeds_in_delta:
-                # fresh crawl: the seed frontier is the first "addition"
-                cand_new = frontier.unionByName(cand_new)
-            frontier_out = cand_new
-
         # The commit's 5 concurrent writes are the ONLY actions on the round
-        # critical path; they fill every observation as a side effect.
+        # critical path; they fill every observation as a side effect. The
+        # frontier is committed whole every round (the reference swaps its
+        # FRONTIER_VERTEX set whole every iteration).
         store.commit(
             round_i,
             {
-                "frontier": frontier_out,
+                "frontier": plan.new_frontier,
                 "seen": seen_out,
                 "vertices": plan.vertices_delta,
                 "edges": plan.edges_delta,
@@ -753,7 +669,6 @@ def _run_crawl_loop(
             # full run configuration rides in every snapshot manifest.
             meta={
                 "urls_in": urls_in,
-                "frontier_full": frontier_full,
                 "settings": {
                     "max_rounds": cfg.max_rounds,
                     "host_budget": cfg.host_budget,
@@ -768,14 +683,8 @@ def _run_crawl_loop(
         )
         # Next round's frontier (lineage truncation + exact resume
         # equivalence: read back from the committed snapshot, not in-memory
-        # lineage). Delta mode rebuilds it lazily from committed parquet
-        # (base ∪ adds anti-join seen deltas); its consumers re-execute
-        # that plan — persisting it lost the round-5 A/B (BENCH/BASELINE.md).
-        frontier_next = (
-            store.read(spark, round_i, "frontier")
-            if frontier_full
-            else _load_frontier(spark, store, round_i)
-        )
+        # lineage).
+        frontier_next = store.read(spark, round_i, "frontier")
 
         # Next round's LSM probe part (this round's committed seen delta,
         # re-laid-out for the zero-exchange anti-join chain) is built here
@@ -811,14 +720,6 @@ def _run_crawl_loop(
         batch_n = stats["batch"]
         urls_fetched = stats["vertices"]
         n_edges = stats["edges"]
-        if frontier_full:
-            n_frontier_next = stats["frontier"]
-        elif seeds_in_delta:
-            # the committed delta includes the seed frontier itself
-            n_frontier_next = stats["frontier"] - batch_n
-        else:
-            # exact: deltas are disjoint from the frontier and batch ⊆ frontier
-            n_frontier_next = urls_in - batch_n + stats["frontier"]
         # deduped is cosmetic (log only): observation value, never recomputed
         try:
             n_raw_candidates = int(obs["raw_candidates"].get["n"])
@@ -834,7 +735,7 @@ def _run_crawl_loop(
                 -1,
                 float(duration),
                 int(urls_fetched),
-                int(n_frontier_next),
+                int(stats["frontier"]),
                 int(n_edges),
                 int(batch_n),
                 int(urls_fetched),
@@ -870,8 +771,7 @@ def _run_crawl_loop(
                 cfg.csv_dir, cfg.csv_basename, cfg.csv_save_living
             ).end_iteration(spark, store, round_i, duration)
 
-        urls_in = n_frontier_next
-        prev_batch_n = batch_n
+        urls_in = stats["frontier"]
         rounds_run += 1
         total_fetched += urls_fetched
 

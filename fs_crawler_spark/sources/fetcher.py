@@ -26,11 +26,8 @@ Contract (enforced semantics live in ``plans/crawl.py``):
     session.py:109-135) and must be re-queued: these urls do NOT enter the
     seen-set and stay in the frontier for a later round. ``None`` means the
     fetcher never retries (the corpus-join model), and the crawl plan adds
-    zero extra nodes.
-  * ``may_retry``: class-level capability flag. A retrying fetcher must set
-    it True — the crawl loop then keeps full frontier snapshots (delta
-    frontier accounting assumes batch == fetched-or-missed, which retries
-    violate).
+    zero extra nodes. Re-queued urls need nothing else from the fetcher:
+    every round commits its whole next frontier, retries included.
 """
 
 from __future__ import annotations
@@ -40,9 +37,7 @@ from pyspark.sql import DataFrame
 
 class Fetcher:
     """Base fetch seam: subclass and override ``fetch`` (and optionally
-    ``retry_urls`` + ``may_retry``)."""
-
-    may_retry: bool = False
+    ``retry_urls``)."""
 
     def fetch(self, batch: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError

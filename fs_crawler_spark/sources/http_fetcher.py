@@ -78,8 +78,6 @@ class HttpFetcher(Fetcher):
     result frame.
     """
 
-    may_retry = True
-
     def __init__(
         self,
         transport: Callable[[str], Tuple[int, str]] | None = None,

@@ -21,10 +21,9 @@ Mapping:
     produced. Every read is BOUNDED by those recorded snapshots — append
     tables by incremental ``(start, end]`` scans, replace tables (frontier)
     and union views by time-travel to the recorded end snapshot — so rows a
-    crashed attempt appended WITHOUT a manifest row are never visible, and a
-    historical round's frontier reads back exactly what that round wrote
-    (delta frontier mode depends on this: each round's frontier commit is a
-    different table content, and ``_load_frontier`` replays base + deltas);
+    crashed attempt wrote WITHOUT a manifest row are never visible (its
+    frontier overwrite included), and a historical round's frontier reads
+    back exactly what that round wrote, not whatever the live table holds;
   * on resume, ``rollback_to_committed()`` rolls every data table back to the
     last manifest-recorded snapshot (``system.rollback_to_snapshot``), so
     re-running a half-committed round appends exactly once — the Iceberg
@@ -306,8 +305,9 @@ class IcebergCheckpointStore:
         crawl_log: the committed table as of this round (post-commit amendment
         appends included; callers filter on iteration). Replace tables
         (frontier): time-travel to the recorded end snapshot — NOT the live
-        table, which a later round's overwrite has replaced (delta frontier
-        reconstruction reads several rounds' frontiers)."""
+        table, which a later round's (or a crashed attempt's) overwrite may
+        have replaced; historical reads (e.g. the per-round CSV export of an
+        earlier round) get exactly what that round committed."""
         if name == "crawl_log":
             end = self._committed_end(name)
             return self.backend.read(self._tbl(name), snapshot_id=end)

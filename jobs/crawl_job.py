@@ -33,10 +33,6 @@ def main() -> None:
     p.add_argument("--robots", default=None, help="parquet path: (host, disallow_prefix)")
     p.add_argument("--resolve", action="store_true", help="run lazy A4 resolution after the crawl")
     p.add_argument(
-        "--frontier-mode", choices=["auto", "rewrite", "delta"], default="auto",
-        help="per-round frontier commit: full rewrite vs disjoint new-url delta",
-    )
-    p.add_argument(
         "--pages-url-partitioned", action="store_true",
         help="declare the pages table bucketed/hash-partitioned by url "
         "(Iceberg bucket(N, url) or a url-repartitioned cache): the fetch "
@@ -63,7 +59,6 @@ def main() -> None:
         host_budget=args.host_budget,
         mode=args.mode,
         n_shards=args.n_shards,
-        frontier_mode=args.frontier_mode,
         pages_url_partitioned=args.pages_url_partitioned,
     )
     res = run_crawl(spark, pages, args.seeds, args.checkpoint, cfg, robots=robots)

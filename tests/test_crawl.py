@@ -112,10 +112,14 @@ def test_resume_is_identical(spark, pages120, tmp_path):
 
 
 def test_crawl_log_lineage(spark, pages120, tmp_path):
-    run_crawl(spark, pages120, [doc_url(0)], str(tmp_path / "c"), CrawlConfig(max_rounds=3))
-    log = read_output(spark, str(tmp_path / "c"), "crawl_log")
+    from fs_crawler_spark.sources.checkpoint import CheckpointStore
+
+    d = str(tmp_path / "c")
+    # a budget small enough that later rounds defer part of the frontier
+    run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=6, host_budget=7))
+    log = read_output(spark, d, "crawl_log")
     totals = log.filter(F.col("partition_id") == -1)
-    assert totals.count() == 3  # one total row per round
+    assert totals.count() == 6  # one total row per round
     # per-partition urls_in sums to the round total
     per_part = (
         log.filter(F.col("partition_id") >= 0)
@@ -126,9 +130,20 @@ def test_crawl_log_lineage(spark, pages120, tmp_path):
     assert joined.filter(F.col("s") != F.col("urls_in")).count() == 0
     assert totals.filter(F.col("snapshot_id") <= 0).count() == 0
     # fetched totals equal the vertex count
-    vertices = read_output(spark, str(tmp_path / "c"), "vertices")
+    vertices = read_output(spark, d, "vertices")
     fetched_total = totals.agg(F.sum("urls_fetched")).collect()[0][0]
     assert fetched_total == vertices.count()
+    # the logged frontier gauge is exact: each round's total equals the size
+    # of the frontier that round committed
+    store = CheckpointStore(d)
+    by_round = {r["iteration"]: r for r in totals.collect()}
+    for r, row in by_round.items():
+        assert row["frontier"] == store.read(spark, r, "frontier").count(), r
+    # the budget deferred rows: some round batched less than the frontier
+    # the previous round left behind
+    assert any(
+        by_round[r]["urls_in"] < by_round[r - 1]["frontier"] for r in range(1, 6)
+    )
 
 
 def test_resume_rederives_lost_totals(spark, pages120, tmp_path):
@@ -163,55 +178,25 @@ def test_resume_rederives_lost_totals(spark, pages120, tmp_path):
     assert totals[1]["duration"] == 0.0  # unrecoverable, zeroed
 
 
-def test_frontier_delta_mode_identical_and_resumable(spark, pages120, tmp_path):
-    """Delta-frontier commits (auto under a host budget) must produce
-    byte-identical tables and crawl ordering vs full rewrites, and resume
-    from the reconstructed frontier."""
-    rw = str(tmp_path / "rw")
-    dl = str(tmp_path / "dl")
-    res = str(tmp_path / "res")
-    budget = 7  # defers most of the frontier -> deltas actually differ
-    run_crawl(
-        spark, pages120, [doc_url(0)], rw,
-        CrawlConfig(max_rounds=6, host_budget=budget, frontier_mode="rewrite"),
-    )
-    run_crawl(
-        spark, pages120, [doc_url(0)], dl,
-        CrawlConfig(max_rounds=6, host_budget=budget, frontier_mode="delta"),
-    )
-    for table in ("vertices", "edges", "seen"):
-        a = sorted(map(tuple, read_output(spark, rw, table).collect()))
-        b = sorted(map(tuple, read_output(spark, dl, table).collect()))
-        assert a == b, table
-    # reconstructed frontier == committed full frontier, row for row
+def test_delta_frontier_checkpoint_is_refused(spark, pages120, tmp_path):
+    """Older builds could commit only a round's new urls as its frontier
+    (manifest ``frontier_full: false``). Reading that as the whole frontier
+    would silently drop urls, so resume and load_frontier refuse it."""
+    import json
+    import os
+
     from fs_crawler_spark.plans.crawl import load_frontier
 
-    fa = sorted(map(tuple, load_frontier(spark, rw).collect()))
-    fb = sorted(map(tuple, load_frontier(spark, dl).collect()))
-    assert fa == fb
-    # exact frontier gauge in the log totals at every round
-    log_rw = {
-        r["iteration"]: r["frontier"]
-        for r in read_output(spark, rw, "crawl_log")
-        .filter(F.col("partition_id") == -1).collect()
-    }
-    log_dl = {
-        r["iteration"]: r["frontier"]
-        for r in read_output(spark, dl, "crawl_log")
-        .filter(F.col("partition_id") == -1).collect()
-    }
-    assert log_rw == log_dl
-    # kill/resume through the delta reconstruction path
-    run_crawl(
-        spark, pages120, [doc_url(0)], res,
-        CrawlConfig(max_rounds=3, host_budget=budget, frontier_mode="delta"),
-    )
-    r2 = run_crawl(
-        spark, pages120, [doc_url(0)], res,
-        CrawlConfig(max_rounds=6, host_budget=budget, frontier_mode="delta"),
-    )
-    assert r2["start_round"] == 3
-    for table in ("vertices", "edges", "seen"):
-        a = sorted(map(tuple, read_output(spark, rw, table).collect()))
-        b = sorted(map(tuple, read_output(spark, res, table).collect()))
-        assert a == b, f"resume {table}"
+    d = str(tmp_path / "c")
+    run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=2))
+    path = os.path.join(d, "snapshots", "round=1", "MANIFEST.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["meta"]["frontier_full"] = False
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+
+    with pytest.raises(ValueError, match="round 1"):
+        run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=4))
+    with pytest.raises(ValueError, match="round 1"):
+        load_frontier(spark, d)

@@ -31,7 +31,6 @@ def test_crawl_job_main(spark, sf_dir, tmp_path, monkeypatch, capsys):
             "--max-rounds", "3",
             "--host-budget", "50",
             "--n-shards", "4",
-            "--frontier-mode", "rewrite",
             "--pages-url-partitioned",
         ],
     )

@@ -27,8 +27,6 @@ class FlakyOnceFetcher(Fetcher):
     ``discovered_iter == <rounds seen so far>`` — captured eagerly via
     ``F.lit`` at plan-build time (one plan per round), no lazy state."""
 
-    may_retry = True
-
     def __init__(self, pages):
         self.pages = pages
         self.rounds_seen = 0
@@ -124,23 +122,3 @@ def test_retry_urls_refetched_next_round_exactly_once(spark, pages60, tmp_path):
             assert it >= base_vertices[url], url
     # seen-set ends complete (every retried url eventually marked seen)
     assert set(hash_of) == set(got)
-
-
-def test_retry_fetcher_forces_full_frontier_snapshots(spark, pages60, tmp_path):
-    """may_retry disables delta frontier commits (delta round accounting
-    assumes batch == fetched-or-missed): every manifest must say
-    frontier_full."""
-    from fs_crawler_spark.sources.checkpoint import CheckpointStore
-
-    ck = str(tmp_path / "ck")
-    run_crawl(
-        spark,
-        pages60,
-        seeds=[doc_url(0)],
-        checkpoint_dir=ck,
-        cfg=CrawlConfig(max_rounds=4, host_budget=3, frontier_mode="delta"),
-        fetcher=FlakyOnceFetcher(pages60),
-    )
-    store = CheckpointStore(ck)
-    for r in store.committed_rounds():
-        assert store.manifest(r).get("meta", {}).get("frontier_full", True), r

@@ -1,8 +1,8 @@
 """Iceberg commit-protocol tests, catalog-free: the SimulatedIcebergBackend
 reproduces the snapshot semantics the store relies on (append/replace/delete
 log, time-travel, incremental (start,end] scans, rollback), so the protocol —
-manifest-row-last atomicity, bounded reads, delta-frontier reconstruction,
-rollback-on-resume — is pinned by end-to-end runs even though the sandbox has
+manifest-row-last atomicity, bounded reads (including the time-travel frontier
+read past an orphan overwrite), rollback-on-resume — is pinned by end-to-end runs even though the sandbox has
 no iceberg-spark-runtime jar. ``test_iceberg_store.py`` keeps the real-catalog
 e2e for environments that have one."""
 
@@ -74,34 +74,6 @@ def test_crawl_on_simulated_iceberg_matches_parquet(spark, pages60, tmp_path):
         assert got == want, name
     # layout contract: seen is bucket(n_shards, url)-partitioned
     assert store.backend.partition_spec("sim.e2e.seen") == [8, "url"]
-
-
-def test_delta_frontier_mode_on_iceberg(spark, pages60, tmp_path):
-    """The round-3 bug: frontier overwrites made every per-round frontier read
-    return the LIVE table, so delta reconstruction silently dropped the base
-    frontier. Time-travel reads must give byte-identical results to the
-    parquet store in forced-delta mode, including across a kill/resume."""
-    cfg = CrawlConfig(max_rounds=30, host_budget=5, frontier_mode="delta")
-    store = _store(spark, tmp_path, "delta")
-    # kill after 3 rounds, then resume to exhaustion
-    run_crawl(
-        spark,
-        pages60,
-        [doc_url(0)],
-        str(tmp_path / "i"),
-        CrawlConfig(max_rounds=3, host_budget=5, frontier_mode="delta"),
-        store=store,
-    )
-    res = run_crawl(spark, pages60, [doc_url(0)], str(tmp_path / "i"), cfg, store=store)
-    assert res["start_round"] == 3
-    run_crawl(spark, pages60, [doc_url(0)], str(tmp_path / "p"), cfg)
-
-    from fs_crawler_spark.plans.crawl import read_output
-
-    for name in ("vertices", "edges", "seen"):
-        got = _table_rows(spark, store, name)
-        want = sorted(map(tuple, read_output(spark, str(tmp_path / "p"), name).collect()))
-        assert got == want, name
 
 
 def test_crash_orphans_invisible_and_rolled_back(spark, pages60, tmp_path):

@@ -18,7 +18,7 @@ def test_manifest_codec_roundtrip():
         "snapshot_id": 123456789,
         "tables": ["vertices", "seen", "edges", "crawl_log", "frontier"],
         "compacted": ["seen"],
-        "meta": {"urls_in": 42, "frontier_full": False, "settings": {"n_shards": 8}},
+        "meta": {"urls_in": 42, "settings": {"n_shards": 8}},
         "table_snapshots": {"seen": [10, 11], "frontier": [-1, 2]},
     }
     row_tuple = encode_manifest(manifest)
