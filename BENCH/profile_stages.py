@@ -65,7 +65,7 @@ JOB = textwrap.dedent(
     t0 = time.monotonic()
     res = run_crawl(spark, pages, seeds, d,
                     CrawlConfig(max_rounds=60, host_budget=125_000 * cores,
-                                n_shards=16, pages_url_partitioned=True))
+                                pages_url_partitioned=True))
     dt = time.monotonic() - t0
     print(json.dumps({"cores": cores, "pages": N, "rounds": res["rounds"],
                       "fetched": res["total_fetched"], "sec": round(dt, 1),

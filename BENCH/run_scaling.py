@@ -46,7 +46,7 @@ CRAWL_JOB = textwrap.dedent(
     pages.count()
     t0 = time.monotonic()
     res = run_crawl(spark, pages, [doc_url(0)], tempfile.mkdtemp(),
-                    CrawlConfig(max_rounds=60, host_budget=100000, n_shards=16))
+                    CrawlConfig(max_rounds=60, host_budget=100000))
     dt = time.monotonic() - t0
     print(json.dumps({"workload": "crawl", "cores": cores, "pages": 1000000,
                       "rounds": res["rounds"], "sec": round(dt, 1),
@@ -84,7 +84,7 @@ CRAWL_WEAK_JOB = textwrap.dedent(
     t0 = time.monotonic()
     res = run_crawl(spark, pages, seeds, d,
                     CrawlConfig(max_rounds=60, host_budget=125_000 * cores,
-                                n_shards=16, pages_url_partitioned=True))
+                                pages_url_partitioned=True))
     dt = time.monotonic() - t0
     print(json.dumps({"workload": "crawl_weak", "cores": cores, "pages": N,
                       "rounds": res["rounds"], "fetched": res["total_fetched"],
@@ -113,7 +113,7 @@ CRAWL_WIDE_JOB = textwrap.dedent(
     seeds = [doc_url(i) for i in range(4096)]
     t0 = time.monotonic()
     res = run_crawl(spark, pages, seeds, tempfile.mkdtemp(),
-                    CrawlConfig(max_rounds=60, host_budget=500_000, n_shards=16))
+                    CrawlConfig(max_rounds=60, host_budget=500_000))
     dt = time.monotonic() - t0
     print(json.dumps({"workload": "crawl_wide", "cores": cores, "pages": N,
                       "rounds": res["rounds"], "fetched": res["total_fetched"],

@@ -50,6 +50,8 @@ def url_hash(canonical_url: Column) -> Column:
 
 
 def url_shard(hash_col: Column, n_shards: int) -> Column:
-    """Shard id for the partitioned seen-set (Iceberg ``bucket(N, url_hash)``
-    analog; parquet impl partitions by this column)."""
+    """Shard id of a url hash: the partition value of streaming ingest's
+    shard-partitioned seen index and the key of the bloom filter's per-shard
+    blobs. Both must use this one function, or ingest's partition pruning
+    would skip the shard a bloom "maybe seen" row actually lives in."""
     return F.pmod(hash_col, F.lit(n_shards)).cast("int")

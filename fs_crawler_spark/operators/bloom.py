@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.urls import url_shard
+
 BLOOM_SCHEMA = StructType(
     [
         StructField("shard", IntegerType(), False),
@@ -104,7 +106,7 @@ def build_bloom_shards(
         )
 
     return (
-        seen.withColumn("shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
+        seen.withColumn("shard", url_shard(F.col("url_hash"), n_shards))
         .select("shard", "url")
         .groupBy("shard")
         .applyInPandas(build, BLOOM_SCHEMA)
@@ -170,7 +172,7 @@ def bloom_prefilter(
     cand = candidates.select(
         "url",
         "url_hash",
-        F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard"),
+        url_shard(F.col("url_hash"), n_shards).alias("shard"),
     )
     return (
         cand.groupBy("shard")

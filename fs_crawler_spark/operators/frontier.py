@@ -13,8 +13,8 @@ Anti-joins key on (url_hash, url): the long hash drives partitioning/compare
 speed, the url equality makes the join exact under hash collision (correctness
 never depends on the 64-bit hash). At 10^10 URLs the seen side is a bucketed
 Iceberg table (bucket(N, url) transform) so the probe is a storage-partitioned
-join; the parquet test impl stores per-round seen deltas partitioned by
-``shard = pmod(url_hash, N)`` to model the same layout.
+join; the parquet store keeps plain per-round seen deltas, and the crawl loop
+re-lays each one out on the join keys once (``anti_join_seen_chain``).
 """
 
 from __future__ import annotations

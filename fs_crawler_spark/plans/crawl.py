@@ -22,7 +22,8 @@ Scale notes (10^10-URL frontier, 1000 executors):
   * the two shuffles per round are exactly the ones north_rule names — the
     host-partitioned politeness window (salted two-phase top-k) and the
     url-keyed seen anti-join (bucketed seen-set => storage-partitioned join
-    under Iceberg; parquet impl models it with shard partitions);
+    under Iceberg; the parquet store keeps seen as plain per-round deltas,
+    which the loop's LSM probe parts re-lay-out on the join keys);
   * per-round state writes are append-only deltas; nothing rewrites O(seen);
   * extraction is Arrow-batched and partition-preserving (no shuffle);
   * lineage is truncated every round by reading state back from the snapshot;
@@ -42,7 +43,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.extract import extract_pages, extract_persons
-from ..functions.urls import url_shard
 from ..operators.frontier import (
     anti_join_seen_chain,
     as_frontier_rows,
@@ -70,7 +70,6 @@ class CrawlConfig:
     # cut the re-rank input 4x and the crawl ~10% wall; raise it on
     # clusters where a single phase-1 cell of a hub host would exceed a
     # task's comfortable sort size (cell ~ frontier/host/salt_n rows).
-    n_shards: int = 32  # seen-set shard count (Iceberg bucket(N) analog)
     edge_type: str = UNTYPED_PARENT
     mode: str = "web"  # "web" (href links) | "persons" (GedcomX-parity JSON)
     compact_every: int | None = 4  # rewrite seen as one snapshot every K
@@ -187,14 +186,24 @@ def _load_frontier(spark: SparkSession, store, round_i: int) -> DataFrame:
     """The frontier as of AFTER ``round_i``: the whole frontier that round
     committed (a lineage-truncating read-back of committed state).
 
-    Checkpoints written by older builds with delta frontier commits can hold
-    rounds whose manifest says ``frontier_full: false``: their frontier table
-    is only that round's new urls, and reading it as the whole frontier
-    would silently drop the rest, so such a round is refused."""
+    This is also where checkpoints written by older builds are refused, so
+    resume and ``load_frontier`` reject them alike:
+      * a round whose manifest says ``frontier_full: false`` committed only
+        its new urls as the frontier; reading that as the whole frontier
+        would silently drop the rest;
+      * a seen table with a ``shard`` column comes from the shard-partitioned
+        seen layout, which does not union with the plain seen deltas written
+        now. The check reads only the table's schema."""
     if not store.manifest(round_i).get("meta", {}).get("frontier_full", True):
         raise ValueError(
             f"round {round_i} under {store.root} committed a delta frontier "
             "(frontier_full=false); only whole-frontier checkpoints can be "
+            "read"
+        )
+    if "shard" in store.read(spark, round_i, "seen").columns:
+        raise ValueError(
+            f"round {round_i} under {store.root} has a shard-partitioned seen "
+            "table (written by an older build); only plain seen tables can be "
             "read"
         )
     return store.read(spark, round_i, "frontier")
@@ -238,16 +247,14 @@ def crawl_round(
     vertex. Urls the fetcher reports via ``retry_urls`` (transient failures)
     do NOT enter the seen-set and stay in the frontier for a later round.
 
-    ``observations`` (optional) attaches Observation counters to the fetched /
-    edges / candidates / frontier nodes; they fill during whatever action
-    first executes each node (the snapshot writes) — the free metrics path.
+    ``observations`` (optional) attaches Observation counters under the keys
+    ``raw_candidates`` and ``candidates`` (the dedup metric); they fill during
+    whatever action first executes each node (the snapshot writes).
     """
     obs = observations or {}
     batch, deferred, spool = select_batch(
         frontier, cfg.host_budget, cfg.salt_n, host_stats=host_stats
     )
-    if "batch" in obs:
-        batch = batch.observe(obs["batch"], F.count(F.lit(1)).alias("n"))
 
     # "Fetch" through the pluggable seam (S3).
     if fetcher is None:
@@ -269,8 +276,6 @@ def crawl_round(
 
     if cfg.mode == "persons":
         parsed = extract_persons(fetched)
-        if "fetched" in obs:
-            parsed = parsed.observe(obs["fetched"], F.count(F.lit(1)).alias("n"))
         vertices_delta = parsed.select(
             F.col("url").alias("id"),
             F.col("color"),
@@ -304,8 +309,6 @@ def crawl_round(
         )
     else:
         parsed = extract_pages(fetched)
-        if "fetched" in obs:
-            parsed = parsed.observe(obs["fetched"], F.count(F.lit(1)).alias("n"))
         vertices_delta = parsed.select(
             F.col("url").alias("id"),
             F.lit(0).cast("int").alias("color"),
@@ -332,17 +335,9 @@ def crawl_round(
                 F.lit(None).cast("string").alias("id"),
             )
         )
-    if "edges" in obs:
-        edges_delta = edges_delta.observe(obs["edges"], F.count(F.lit(1)).alias("n"))
 
     def _to_seen(df: DataFrame) -> DataFrame:
-        return df.select(
-            "url",
-            "url_hash",
-            "host",
-            F.col("discovered_iter"),
-            url_shard(F.col("url_hash"), cfg.n_shards).alias("shard"),
-        )
+        return df.select("url", "url_hash", "host", "discovered_iter")
 
     batch_seen = _to_seen(batch_done)
 
@@ -383,17 +378,10 @@ def crawl_round(
     else:
         seen_delta = batch_seen
 
-    # One shuffle partition per shard -> exactly one file per shard dir in
-    # the snapshot (the parquet stand-in for Iceberg's bucket(N, url) layout;
-    # without this, |batch partitions| x |shards| tiny files accrete and the
-    # per-round seen read becomes listing-bound).
-    seen_delta = seen_delta.repartition(cfg.n_shards, F.col("shard"))
     # fww is exact here: candidates carry discovered_iter = round_i + 1,
     # strictly greater than every deferred row's, and priority is constant —
     # so the deferred (≫ candidates under a budget) side never re-shuffles.
     new_frontier = merge_frontier_fww(deferred, candidates)
-    if "frontier" in obs:
-        new_frontier = new_frontier.observe(obs["frontier"], F.count(F.lit(1)).alias("n"))
 
     return RoundPlan(
         batch,
@@ -529,7 +517,7 @@ def _run_crawl_loop(
 
     rounds_run = 0
     total_fetched = 0
-    urls_in: int | None = None  # carried from the previous round's observation
+    urls_in: int | None = None  # carried from the previous round's counts
     # Round-total log rows need observation values the commit itself
     # produces, so round r's totals PIGGYBACK on round r+1's crawl_log write
     # (zero extra jobs); the final round's totals flush once after the loop.
@@ -646,9 +634,7 @@ def _run_crawl_loop(
             and (round_i + 1) % cfg.compact_every == 0
         )
         if compaction_round:
-            seen_out = seen.unionByName(plan.seen_delta).repartition(
-                cfg.n_shards, F.col("shard")
-            )
+            seen_out = seen.unionByName(plan.seen_delta)
             compacted = ["seen"]
 
         # The commit's 5 concurrent writes are the ONLY actions on the round
@@ -673,12 +659,10 @@ def _run_crawl_loop(
                     "max_rounds": cfg.max_rounds,
                     "host_budget": cfg.host_budget,
                     "salt_n": cfg.salt_n,
-                    "n_shards": cfg.n_shards,
                     "mode": cfg.mode,
                     "seeds": seeds,
                 },
             },
-            partition_by={"seen": ["shard"]},
             snapshot_id=snapshot_id,
         )
         # Next round's frontier (lineage truncation + exact resume

@@ -52,7 +52,6 @@ class CheckpointStore:
         round_i: int,
         tables: dict[str, DataFrame],
         meta: dict[str, Any] | None = None,
-        partition_by: dict[str, list[str]] | None = None,
         compacted: list[str] | None = None,
         snapshot_id: int | None = None,
     ) -> int:
@@ -66,11 +65,7 @@ class CheckpointStore:
 
         def _write(item):
             name, df = item
-            writer = df.write.mode("overwrite")
-            pb = (partition_by or {}).get(name)
-            if pb:
-                writer = writer.partitionBy(*pb)
-            writer.parquet(os.path.join(staging, name))
+            df.write.mode("overwrite").parquet(os.path.join(staging, name))
 
         # Independent tables write concurrently — Spark schedules the jobs in
         # parallel, cutting per-round wall time to ~max(write) instead of the
@@ -89,9 +84,8 @@ class CheckpointStore:
             "compacted": sorted(compacted or []),
             # per-table schema, like an Iceberg table's metadata: reads never
             # depend on parquet schema inference, so an EMPTY delta (e.g. a
-            # round whose whole batch was retried writes zero seen rows — a
-            # partitioned write of an empty DataFrame leaves no schema-
-            # bearing file at all) still reads back as a typed empty table.
+            # round whose whole batch was retried writes zero seen rows)
+            # still reads back as a typed empty table.
             "schemas": {name: df.schema.jsonValue() for name, df in tables.items()},
             "meta": meta or {},
         }
@@ -132,9 +126,8 @@ class CheckpointStore:
 
     def read(self, spark: SparkSession, round_i: int, name: str) -> DataFrame:
         """Read one table of one committed round, with the schema the commit
-        recorded (legacy manifests without one fall back to inference).
-        Partition columns (e.g. seen's ``shard``) are matched by name against
-        the provided schema, so partitioned and empty tables read alike."""
+        recorded (legacy manifests without one fall back to inference), so
+        empty and non-empty tables read alike."""
         path = os.path.join(self._round_dir(round_i), name)
         sch = self.manifest(round_i).get("schemas", {}).get(name)
         if sch:
@@ -156,23 +149,15 @@ class CheckpointStore:
         for r in rounds:
             if name in self.manifest(r).get("compacted", []):
                 start = r
-        paths = []
-        for r in rounds:
-            if r < start:
-                continue
-            p = os.path.join(self._round_dir(r), name)
-            if os.path.exists(p):
-                paths.append(p)
-        if not paths:
-            return None
-        # Read per-round and union (multi-path reads fight partition-dir
-        # discovery when a table is itself partitioned, e.g. seen/shard=N);
-        # per-round reads use each round's manifest-recorded schema.
+        # Read per round and union: each round reads with the schema its own
+        # manifest recorded.
         dfs = [
             self.read(spark, r, name)
             for r in rounds
             if r >= start and os.path.exists(os.path.join(self._round_dir(r), name))
         ]
+        if not dfs:
+            return None
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df)

@@ -11,8 +11,8 @@ Mapping:
     the frontier (replace table) is an overwrite commit;
   * the seen table is ``bucket(n_shards, url)``-partitioned — the per-round
     candidates anti-join against it becomes a STORAGE-PARTITIONED JOIN
-    (SPARK-37375): no shuffle of the seen side, the layout the parquet store
-    models with shard=pmod(url_hash, N) directory partitions;
+    (SPARK-37375): no shuffle of the seen side. The layout is table-level
+    (set when the table is created), so ``commit`` takes no partitioning;
   * a crawl round is committed by appending ONE row to the tiny
     ``{namespace}.round_manifests`` table — written LAST, so a round exists
     iff its manifest row does (the parquet store's MANIFEST.json analog; a
@@ -188,8 +188,6 @@ class IcebergCheckpointStore:
         round_i: int,
         tables: dict[str, DataFrame],
         meta: dict[str, Any] | None = None,
-        partition_by: dict[str, list[str]] | None = None,  # layout is table-
-        # level in Iceberg (bucket spec above); accepted for surface parity
         compacted: list[str] | None = None,
         snapshot_id: int | None = None,
     ) -> int:

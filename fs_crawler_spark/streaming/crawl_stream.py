@@ -107,10 +107,8 @@ def start_crawl_stream(
     # the seed list is just the first frontier file
     seed_frontier(spark, seeds).coalesce(1).write.mode("append").parquet(dirs.frontier)
 
-    seen_ddl = FRONTIER_DDL + ", shard int"
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        seen = _read_optional(spark, dirs.seen, seen_ddl)
+        seen = _read_optional(spark, dirs.seen, FRONTIER_DDL)
         frontier = dedup_frontier(batch_df)
         if seen is not None:
             # stale feedback rows (url fetched by a batch that ran after

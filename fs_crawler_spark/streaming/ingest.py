@@ -60,7 +60,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.urls import canonicalize_url, url_hash, url_host
+from ..functions.urls import canonicalize_url, url_hash, url_host, url_shard
 from ..operators.bloom import build_bloom_shards, merge_bloom_shards, bloom_prefilter
 from ..schemas import PAGES
 
@@ -150,7 +150,7 @@ def ingest_batch(
         canon.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .withColumn("shard", F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int"))
+        .withColumn("shard", url_shard(F.col("url_hash"), n_shards))
     )
 
     maybe_cached = None

@@ -29,7 +29,6 @@ def main() -> None:
     p.add_argument("--max-rounds", type=int, default=50)
     p.add_argument("--host-budget", type=int, default=None)
     p.add_argument("--mode", choices=["web", "persons"], default="web")
-    p.add_argument("--n-shards", type=int, default=256)
     p.add_argument("--robots", default=None, help="parquet path: (host, disallow_prefix)")
     p.add_argument("--resolve", action="store_true", help="run lazy A4 resolution after the crawl")
     p.add_argument(
@@ -58,7 +57,6 @@ def main() -> None:
         max_rounds=args.max_rounds,
         host_budget=args.host_budget,
         mode=args.mode,
-        n_shards=args.n_shards,
         pages_url_partitioned=args.pages_url_partitioned,
     )
     res = run_crawl(spark, pages, args.seeds, args.checkpoint, cfg, robots=robots)

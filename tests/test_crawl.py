@@ -178,10 +178,28 @@ def test_resume_rederives_lost_totals(spark, pages120, tmp_path):
     assert totals[1]["duration"] == 0.0  # unrecoverable, zeroed
 
 
-def test_delta_frontier_checkpoint_is_refused(spark, pages120, tmp_path):
-    """Older builds could commit only a round's new urls as its frontier
-    (manifest ``frontier_full: false``). Reading that as the whole frontier
-    would silently drop urls, so resume and load_frontier refuse it."""
+def _mark_delta_frontier(manifest):
+    manifest["meta"]["frontier_full"] = False
+
+
+def _mark_shard_seen(manifest):
+    manifest["schemas"]["seen"]["fields"].append(
+        {"name": "shard", "type": "integer", "nullable": True, "metadata": {}}
+    )
+
+
+@pytest.mark.parametrize(
+    "mark_legacy",
+    [_mark_delta_frontier, _mark_shard_seen],
+    ids=["delta_frontier", "shard_seen"],
+)
+def test_delta_frontier_checkpoint_is_refused(spark, pages120, tmp_path, mark_legacy):
+    """Checkpoints of older builds that the current reader would misread are
+    refused by resume and load_frontier, naming the round:
+      * a delta frontier (manifest ``frontier_full: false``) holds only the
+        round's new urls; reading it as the whole frontier drops urls;
+      * a shard-partitioned seen table (an extra ``shard`` column) does not
+        union with the plain seen deltas a resumed run writes."""
     import json
     import os
 
@@ -192,7 +210,7 @@ def test_delta_frontier_checkpoint_is_refused(spark, pages120, tmp_path):
     path = os.path.join(d, "snapshots", "round=1", "MANIFEST.json")
     with open(path) as f:
         manifest = json.load(f)
-    manifest["meta"]["frontier_full"] = False
+    mark_legacy(manifest)
     with open(path, "w") as f:
         json.dump(manifest, f)
 

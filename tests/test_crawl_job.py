@@ -30,7 +30,6 @@ def test_crawl_job_main(spark, sf_dir, tmp_path, monkeypatch, capsys):
             "--checkpoint", ckpt,
             "--max-rounds", "3",
             "--host-budget", "50",
-            "--n-shards", "4",
             "--pages-url-partitioned",
         ],
     )
@@ -41,4 +40,4 @@ def test_crawl_job_main(spark, sf_dir, tmp_path, monkeypatch, capsys):
     assert out == {"rounds": 3, "total_fetched": 11}
     assert read_output(spark, ckpt, "vertices").count() == 11
     settings = CheckpointStore(ckpt).manifest(2)["meta"]["settings"]
-    assert (settings["max_rounds"], settings["host_budget"], settings["n_shards"]) == (3, 50, 4)
+    assert (settings["max_rounds"], settings["host_budget"]) == (3, 50)

@@ -86,7 +86,7 @@ def test_read_optional_missing_vs_error(spark, tmp_path):
 
     from fs_crawler_spark.streaming.crawl_stream import FRONTIER_DDL, _read_optional
 
-    ddl = FRONTIER_DDL + ", shard int"
+    ddl = FRONTIER_DDL
     assert _read_optional(spark, str(tmp_path / "nope"), ddl) is None
     with _pytest.raises(Exception):
         _read_optional(spark, "", ddl)  # invalid path: not a first-batch case
