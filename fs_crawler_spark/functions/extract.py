@@ -36,10 +36,6 @@ def extract_text_bytes(html: bytes) -> str | None:
     return m.group(1).decode("utf-8") if m else None
 
 
-def extract_links_str(html: str) -> list[str]:
-    return _HREF_RE.findall(html)
-
-
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         htmls = pdf["html"]

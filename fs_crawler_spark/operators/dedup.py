@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.textfns import doc_fingerprint, text_sha, ws_tokens
+from ..functions.textfns import text_sha, ws_tokens
 
 
 def _spread(df: DataFrame, key: str, parts: int | None = None) -> DataFrame:
@@ -44,19 +44,8 @@ def _spread(df: DataFrame, key: str, parts: int | None = None) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact + fingerprint dedup
+# Exact dedup
 # ---------------------------------------------------------------------------
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the min-id representative per identical text. Returns survivors."""
-    w = Window.partitionBy("_sha").orderBy(F.col(id_col).asc())
-    return (
-        docs.withColumn("_sha", text_sha(F.col(text_col)))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_sha", "_rn")
-    )
-
-
 def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(sha, n_docs, keeper_id) per duplicate group with n_docs >= 2."""
     return (
@@ -64,19 +53,6 @@ def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
         .groupBy("sha")
         .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
         .filter(F.col("n_docs") >= 2)
-    )
-
-
-def fingerprint_dedup(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", shingle: int = 8
-) -> DataFrame:
-    """Near-dup keying on the rolling-hash fingerprint; min-id survivor."""
-    w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
-    return (
-        docs.withColumn("_fp", doc_fingerprint(F.col(text_col), shingle))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
     )
 
 
@@ -117,11 +93,7 @@ def token_jaccard_pairs(
     only thing standing between you and sum(df^2) on stopwords.
     Returns (id_a, id_b, jaccard) with jaccard rounded to 4 dp.
 
-    NOTE (cache lifetime): the prefix path persists the per-doc token-array
-    frame for the round's three consumers (prefix explode + both verify
-    joins). The handle is exposed as ``result._tj_cache`` so callers that
-    invoke this repeatedly in one session can ``.unpersist()`` it once the
-    result is materialized; otherwise it lives until session end.
+    The prefix path's persisted token-array frame outlives the call.
     """
     docs = _spread(docs, id_col)
     blk = [F.col(block_col).alias("_blk")] if block_col else []
@@ -273,8 +245,6 @@ def token_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    if method == "prefix":
-        out._tj_cache = arrs  # cleanup hook (see docstring)
     return out
 
 
@@ -373,7 +343,7 @@ def minhash_lsh_pairs(
     ~10x slowdown). Bands explode -> self-join on (band, bucket) carrying only
     ids -> candidate pairs -> exact-Jaccard verify by joining the shingle sets
     back by id. Shuffles: band-bucket join + two id joins, all narrow keys.
-    Returns (id_a, id_b, jaccard).
+    The persisted frames outlive the call. Returns (id_a, id_b, jaccard).
     """
     rows_per_band = num_hashes // bands
     docs = _spread(docs, id_col)
@@ -428,7 +398,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    out._mh_cache = (base, sigs)  # cleanup hook: unpersist once materialized
     return out
 
 

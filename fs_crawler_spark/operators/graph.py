@@ -537,9 +537,3 @@ def rewrite_relationships(edges: DataFrame, updates: DataFrame) -> DataFrame:
         )
     )
 
-
-def renumber_vertices(vertices: DataFrame, order_col: str = "id") -> DataFrame:
-    """save_valid_graph renumbering analog (graph_validator.py:196-205):
-    1-based vertex_number in canonical order."""
-    w = Window.orderBy(F.col(order_col).asc())
-    return vertices.withColumn("vertex_number", F.row_number().over(w))

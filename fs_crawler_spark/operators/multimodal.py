@@ -65,12 +65,6 @@ def synth_media(spark, docs: DataFrame, kind: str = "image") -> DataFrame:
     )
 
 
-def decode_image(payload: bytes) -> np.ndarray:
-    """REAL CODEC GOES HERE (e.g. PIL.Image.open). Not available in this
-    container — any caller that needs true pixels must inject a codec."""
-    raise NotImplementedError("image codec not available in this environment")
-
-
 def _fake_feature(payload: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in for decode+embed: bucket byte histogram.
 

@@ -70,7 +70,6 @@ class CrawlConfig:
     # cut the re-rank input 4x and the crawl ~10% wall; raise it on
     # clusters where a single phase-1 cell of a hub host would exceed a
     # task's comfortable sort size (cell ~ frontier/host/salt_n rows).
-    edge_type: str = UNTYPED_PARENT
     mode: str = "web"  # "web" (href links) | "persons" (GedcomX-parity JSON)
     compact_every: int | None = 4  # rewrite seen as one snapshot every K
     # rounds (Iceberg compaction analog) so read fan-in stays bounded.
@@ -80,10 +79,6 @@ class CrawlConfig:
     # the full-seen rewrite (<= 1M rows) is cheap next to the chain; at a
     # 10^10-url seen set the rewrite dominates and the cadence should grow
     # (Iceberg's rewrite_data_files scheduling makes the same trade).
-    csv_dir: str | None = None  # per-round reference-CSV appends (the
-    # GraphWriter.end_iteration cadence) — opt-in; see CrawlCsvAppender
-    csv_basename: str = "graph"
-    csv_save_living: bool = True
     pages_url_partitioned: bool = False  # caller declares the pages corpus
     # is hash-partitioned/bucketed by url (an Iceberg bucket(N, url) table,
     # or a `.repartition(K, "url").persist()` cache). The fetch join then
@@ -331,7 +326,7 @@ def crawl_round(
             .select(
                 "source",
                 "destination",
-                F.lit(cfg.edge_type).alias("type"),
+                F.lit(UNTYPED_PARENT).alias("type"),
                 F.lit(None).cast("string").alias("id"),
             )
         )
@@ -748,23 +743,10 @@ def _run_crawl_loop(
         lsm_msg = _lsm_length_warning(len(seen_parts), cfg.compact_every)
         if lsm_msg:
             logger.warning(lsm_msg)
-        if cfg.csv_dir:
-            from ..sources.csv_compat import CrawlCsvAppender
-
-            CrawlCsvAppender(
-                cfg.csv_dir, cfg.csv_basename, cfg.csv_save_living
-            ).end_iteration(spark, store, round_i, duration)
 
         urls_in = stats["frontier"]
         rounds_run += 1
         total_fetched += urls_fetched
-
-    if cfg.csv_dir and rounds_run > 0:
-        from ..sources.csv_compat import CrawlCsvAppender
-
-        CrawlCsvAppender(cfg.csv_dir, cfg.csv_basename, cfg.csv_save_living).finalize(
-            spark, store, start_round + rounds_run - 1
-        )
 
     if pending_totals:
         # flush the final round's totals (one append for the whole run;

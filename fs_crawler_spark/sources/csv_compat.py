@@ -131,6 +131,11 @@ def write_crawl_csv(
 
     ``frontier`` is the engine frontier table (url column) or any DataFrame
     with an ``id``/``url`` column. Returns {logical name: path}.
+
+    Exporting a crawl checkpoint, finished or mid-crawl, reads only its
+    committed state: ``write_crawl_csv(read_output(spark, ckpt, "vertices"),
+    read_output(spark, ckpt, "edges"), load_frontier(spark, ckpt),
+    read_output(spark, ckpt, "crawl_log"), out_dir)``.
     """
     id_col = "url" if "url" in frontier.columns else "id"
     paths = {
@@ -252,121 +257,6 @@ def crawl_log_csv_form(
         )
     )
     return out
-
-
-class CrawlCsvAppender:
-    """Per-round CSV sink — the reference's ``GraphWriter.end_iteration``
-    cadence (graph_writer.py:78-122) instead of one post-crawl export:
-
-      * vertices.csv: APPEND this round's fetched individuals (:83-87);
-      * edges.csv: APPEND edges that became 'within' this round — both
-        endpoints fetched, i.e. max(src_iter, dst_iter) == round (:82, :100-107
-        with clear-on-write);
-      * log.csv: APPEND one cumulative-state row (:32-48);
-      * frontier.vertices.csv: REWRITE with the whole frontier (:116-122);
-      * spanning/frontier edge files: written ONLY at the final iteration
-        (:93-99), from the end-state classification.
-
-    Spark writes directories, so each append lands in ``<file>/iter=N/``
-    part files (header per file — ``spark.read(header=True)`` handles it,
-    and the partition-style name surfaces an ``iter`` column). A mid-crawl
-    ``cat file/iter=*/part-*.csv`` is the reference's tail-the-file analog.
-
-    Everything is derived from COMMITTED snapshot state, so a killed run's
-    export is consistent with its checkpoint; cumulative log counters are
-    re-derived on restart from the committed crawl_log. This export re-reads
-    prior edge deltas each round (as the reference re-scans its in-memory
-    graph) — it is an opt-in sink (CrawlConfig.csv_dir), off by default.
-    """
-
-    def __init__(self, out_dir: str, basename: str = "graph", save_living: bool = True):
-        self.out_dir = out_dir
-        self.basename = basename
-        self.save_living = save_living
-
-    def _path(self, name: str) -> str:
-        return f"{self.out_dir}/{self.basename}.{name}"
-
-    def end_iteration(self, spark, store, round_i: int, duration: float) -> None:
-        from ..plans.crawl import _load_frontier
-
-        vd = store.read(spark, round_i, "vertices")
-        ed = store.read(spark, round_i, "edges")
-        v_all = store.read_union(spark, "vertices", up_to_round=round_i)
-        dests = v_all.select(F.col("id").alias("destination"))
-
-        # vertices delta (reference filters living at write time)
-        v_rows = vertices_to_csv_form(vd, include_living=self.save_living)
-        v_rows.write.mode("overwrite").option("header", True).csv(
-            f"{self._path('vertices.csv')}/iter={round_i}"
-        )
-
-        # edges that BECAME within this round: new edges whose dest was
-        # already fetched, plus old edges whose dest was fetched this round
-        new_within = ed.join(dests, on="destination", how="left_semi")
-        prior = (
-            store.read_union(spark, "edges", up_to_round=round_i - 1)
-            if round_i > 0
-            else None
-        )
-        if prior is not None:
-            vd_dests = F.broadcast(vd.select(F.col("id").alias("destination")))
-            old_within = prior.join(vd_dests, on="destination", how="left_semi")
-            within_delta = new_within.unionByName(old_within.select(*new_within.columns))
-        else:
-            within_delta = new_within
-        edges_to_csv_form(within_delta).write.mode("overwrite").option(
-            "header", True
-        ).csv(f"{self._path('edges.csv')}/iter={round_i}")
-
-        # frontier rewrite (whole current frontier, like the reference)
-        frontier = _load_frontier(spark, store, round_i)
-        frontier.select(F.col("url").alias("#external_id")).write.mode(
-            "overwrite"
-        ).option("header", True).csv(self._path("frontier.vertices.csv"))
-
-        # cumulative log row from committed state (within so far = every
-        # written 'within' delta; spanning = known - within; frontier = 0 for
-        # engine-native crawls — every edge source is fetched)
-        e_all = store.read_union(spark, "edges", up_to_round=round_i)
-        within_total = (
-            e_all.join(dests, on="destination", how="left_semi").count()
-        )
-        n_edges_all = e_all.count()
-        n_vertices = v_all.count()
-        n_frontier = frontier.count()
-        row = spark.createDataFrame(
-            [
-                (
-                    round_i,
-                    float(duration),
-                    n_vertices,
-                    n_frontier,
-                    within_total,
-                    n_edges_all - within_total,
-                    0,
-                )
-            ],
-            "`#iteration` int, duration double, vertices long, frontier long, "
-            "edges long, spanning_edges long, frontier_edges long",
-        )
-        row.write.mode("overwrite").option("header", True).csv(
-            f"{self._path('log.csv')}/iter={round_i}"
-        )
-
-    def finalize(self, spark, store, round_i: int) -> None:
-        """Final-iteration files (graph_writer.py:93-99): spanning/frontier
-        edge classes from the end-state classification."""
-        v_all = store.read_union(spark, "vertices", up_to_round=round_i)
-        e_all = store.read_union(spark, "edges", up_to_round=round_i)
-        classified = classify_edges(e_all, v_all)
-        for cls, key in (
-            ("spanning", "spanning.edges.csv"),
-            ("frontier", "frontier.edges.csv"),
-        ):
-            edges_to_csv_form(
-                classified.filter(F.col("class") == cls).drop("class")
-            ).write.mode("overwrite").option("header", True).csv(self._path(key))
 
 
 CANONICAL_VERTEX_HEADER = [

@@ -9,7 +9,8 @@ Package and launch:
         --mode web
 
 On a cluster the session comes from spark-submit's conf (master, executors,
-memory); this script only adds the engine's AQE/Arrow settings if unset.
+memory); this script sets only spark.sql.execution.arrow.pyspark.enabled,
+over any --conf for that key. run_crawl turns AQE off inside the loop.
 Resume is automatic: re-submit with the same --checkpoint.
 """
 
@@ -39,14 +40,11 @@ def main() -> None:
     )
     args = p.parse_args()
 
-    builder = SparkSession.builder.appName("fs-crawler-spark")
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = (
+        SparkSession.builder.appName("fs-crawler-spark")
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .getOrCreate()
+    )
 
     from fs_crawler_spark.plans.crawl import CrawlConfig, read_output, run_crawl
     from fs_crawler_spark.plans.resolve import apply_resolution

@@ -174,66 +174,52 @@ def test_migrate_job_end_to_end(spark, tmp_path):
     assert by_id["A"]["surname"] == "" and by_id["A"]["given_name"] == ""
 
 
-def test_per_round_csv_appends(spark, sf_dir, tmp_path):
-    """CrawlConfig.csv_dir drives the reference GraphWriter.end_iteration
-    cadence: per-iteration vertex/within-edge appends + log rows + frontier
-    rewrite, spanning/frontier edge files at the final iteration — and the
-    cumulative result agrees with the one-shot write_crawl_csv export."""
-    import glob
-
+def test_crawl_checkpoint_csv_export(spark, sf_dir, tmp_path):
+    """write_crawl_csv over a crawl's committed state: log.csv comes from the
+    real crawl_log (per-partition lineage rows mixed with one totals row per
+    round), so each cumulative row must agree with the committed tables."""
     from fs_crawler_spark.plans.crawl import CrawlConfig, load_frontier, read_output, run_crawl
     from fs_crawler_spark.sources.corpus import build_pages, doc_url
     from fs_crawler_spark.sources.csv_compat import write_crawl_csv
 
     pages = build_pages(spark, sf_dir, limit_docs=60).cache()
     ckpt = str(tmp_path / "ckpt")
-    csv_dir = str(tmp_path / "csv")
     res = run_crawl(
         spark, pages, [doc_url(0)], ckpt,
-        CrawlConfig(max_rounds=4, host_budget=10, csv_dir=csv_dir),
+        CrawlConfig(max_rounds=4, host_budget=10),
     )
     assert res["rounds"] == 4
-
-    # one iter= append dir per round for the appended files
-    for fname in ("graph.vertices.csv", "graph.edges.csv", "graph.log.csv"):
-        iters = sorted(glob.glob(f"{csv_dir}/{fname}/iter=*"))
-        assert len(iters) == 4, fname
-    # final-iteration files + the per-round frontier rewrite exist
-    assert glob.glob(f"{csv_dir}/graph.spanning.edges.csv/part-*.csv")
-    assert glob.glob(f"{csv_dir}/graph.frontier.edges.csv/part-*.csv")
-    assert glob.glob(f"{csv_dir}/graph.frontier.vertices.csv/part-*.csv")
 
     vertices = read_output(spark, ckpt, "vertices")
     edges = read_output(spark, ckpt, "edges")
     frontier = load_frontier(spark, ckpt)
+    crawl_log = read_output(spark, ckpt, "crawl_log")
+    out = str(tmp_path / "csv")
+    paths = write_crawl_csv(vertices, edges, frontier, crawl_log, out)
 
-    # appended vertices == one-shot export vertices
-    appended_v = spark.read.option("header", True).csv(f"{csv_dir}/graph.vertices.csv")
-    assert appended_v.count() == vertices.count()
-    assert appended_v.select("#external_id").distinct().count() == vertices.count()
+    def read(key):
+        return spark.read.option("header", True).csv(paths[key])
 
-    # per-round within appends sum to the end-state within class; the last
-    # cumulative log row equals the one-shot reconstruction's last row
-    oneshot = str(tmp_path / "oneshot")
-    log = read_output(spark, ckpt, "crawl_log")
-    write_crawl_csv(vertices, edges, frontier, log, oneshot, basename="g")
-    n_within_oneshot = spark.read.option("header", True).csv(
-        f"{oneshot}/g.edges.csv"
-    ).count()
-    appended_within = spark.read.option("header", True).csv(
-        f"{csv_dir}/graph.edges.csv"
-    )
-    assert appended_within.count() == n_within_oneshot
-    # a url appended as within in one round is never re-appended
-    pair = appended_within.select("#source_vertex", "destination_vertex")
-    assert pair.count() == pair.distinct().count()
+    log = sorted(read("log").collect(), key=lambda r: int(r["#iteration"]))
+    assert [int(r["#iteration"]) for r in log] == [0, 1, 2, 3]
+    v_iters = [r["iteration"] for r in vertices.select("iteration").collect()]
+    totals = {
+        r["iteration"]: r["frontier"]
+        for r in crawl_log.filter(F.col("partition_id") == -1).collect()
+    }
+    for i, row in enumerate(log):
+        assert int(row["vertices"]) == sum(1 for it in v_iters if it <= i), i
+        assert int(row["frontier"]) == totals[i], i
+    assert int(log[-1]["edges"]) + int(log[-1]["spanning_edges"]) == edges.count()
 
-    applog = spark.read.option("header", True).csv(f"{csv_dir}/graph.log.csv")
-    last = applog.orderBy(F.col("#iteration").cast("int").desc()).first()
-    oslog = spark.read.option("header", True).csv(f"{oneshot}/g.log.csv")
-    oslast = oslog.orderBy(F.col("#iteration").cast("int").desc()).first()
-    for col in ("vertices", "edges", "spanning_edges", "frontier_edges"):
-        assert int(last[col]) == int(oslast[col]), col
+    exported_v = {
+        (r["#external_id"], int(r["iteration"])) for r in read("vertices").collect()
+    }
+    assert exported_v == {
+        (r["id"], r["iteration"]) for r in vertices.select("id", "iteration").collect()
+    }
+    exported_f = {r["#external_id"] for r in read("frontier_vertices").collect()}
+    assert exported_f == {r["url"] for r in frontier.select("url").collect()}
     pages.unpersist()
 
 
