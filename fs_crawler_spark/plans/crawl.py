@@ -6,9 +6,9 @@ waves, graph mutation, LOG row) becomes one pure-function Spark round:
     frontier --(politeness window O5)--> batch + deferred
     batch  ⋈  pages on url             (the "fetch"; join replaces HTTP GET)
     mapInPandas extract (P1)           -> text + outlinks per fetched page
-    outlinks -> canonicalize/hash (P7) -> robots gate -> anti-join vs seen (F1)
-    new frontier = deferred ∪ fresh candidates (first-write-wins)
-    seen += batch;  vertices/edges/log deltas appended;  ONE snapshot commit
+    outlinks -> canonicalize/hash (P7) -> anti-join vs seen (F1) -> robots split
+    new frontier = deferred ∪ allowed candidates (first-write-wins)
+    seen += batch ∪ blocked;  vertices/edges/log deltas appended;  ONE commit
 
 ``crawl_round`` is a pure function of (pages, frontier, seen, robots) — that,
 plus the atomic per-round snapshot, is what makes a killed run resume with an
@@ -28,7 +28,7 @@ Scale notes (10^10-URL frontier, 1000 executors):
   * extraction is Arrow-batched and partition-preserving (no shuffle);
   * lineage is truncated every round by reading state back from the snapshot;
   * round counts (the reference's LOG row, A9) come from one footer-count job
-    over the committed tables; only the cosmetic dedup metric rides on
+    over the committed tables; only the dedup metric rides on
     ``DataFrame.observe``, filled during the commit writes.
 """
 
@@ -51,7 +51,7 @@ from ..operators.frontier import (
     merge_frontier_fww,
 )
 from ..operators.politeness import select_batch
-from ..operators.robots import robots_gate
+from ..operators.robots import robots_gate, robots_split
 from ..schemas import CRAWL_LOG, UNTYPED_PARENT
 from ..sources.checkpoint import CheckpointStore
 from ..sources.fetcher import CorpusJoinFetcher, Fetcher
@@ -221,12 +221,11 @@ def seed_frontier(spark: SparkSession, seeds: list[str]) -> DataFrame:
 def crawl_round(
     pages: DataFrame,
     frontier: DataFrame,
-    seen: DataFrame | None,
+    seen_parts: list[DataFrame],
     robots: DataFrame | None,
     round_i: int,
     cfg: CrawlConfig,
     observations: dict[str, Observation] | None = None,
-    seen_parts: list[DataFrame] | None = None,
     fetcher: Fetcher | None = None,
     host_stats: tuple[int, int] | None = None,
 ) -> RoundPlan:
@@ -234,6 +233,10 @@ def crawl_round(
     ``select_batch``'s one scalar host-stats job (two ints at plan time,
     picking the politeness shape — skipped entirely when the caller passes
     ``host_stats``; the loop piggybacks them on its committed-counts job).
+
+    ``seen_parts``: the seen-set as (url_hash, url) probe frames for
+    ``anti_join_seen_chain``, this round's batch appended last (the loop's
+    LSM list of cached, pre-partitioned deltas; ``[]`` if nothing is seen).
 
     ``fetcher`` overrides the fetch seam (default: inner-join against
     ``pages`` — see sources/fetcher.py). A url the fetcher neither returns
@@ -243,7 +246,8 @@ def crawl_round(
     do NOT enter the seen-set and stay in the frontier for a later round.
 
     ``observations`` (optional) attaches Observation counters under the keys
-    ``raw_candidates`` and ``candidates`` (the dedup metric); they fill during
+    ``raw_candidates`` and ``candidates`` (the dedup metric: candidates
+    before the seen anti-join and after the robots split); they fill during
     whatever action first executes each node (the snapshot writes).
     """
     obs = observations or {}
@@ -343,35 +347,15 @@ def crawl_round(
         raw_candidates = raw_candidates.observe(
             obs["raw_candidates"], F.count(F.lit(1)).alias("n")
         )
-    # The probe side: either the loop-maintained LSM list of cached,
-    # pre-partitioned seen deltas (zero-shuffle chained anti-joins), or the
-    # flat union read (standalone/pure-function use). This round's batch is
-    # always the last probe in the chain.
-    if seen_parts is not None:
-        probes = [*seen_parts, batch_seen.select("url_hash", "url")]
-    elif seen is not None:
-        probes = [
-            seen.select("url_hash", "url").unionByName(
-                batch_seen.select("url_hash", "url")
-            )
-        ]
-    else:
-        probes = [batch_seen.select("url_hash", "url")]
+    probes = [*seen_parts, batch_seen.select("url_hash", "url")]
     unseen = anti_join_seen_chain(raw_candidates, probes)
-
-    candidates = robots_gate(unseen, robots)
-    if "candidates" in obs:
-        candidates = candidates.observe(obs["candidates"], F.count(F.lit(1)).alias("n"))
 
     # robots-blocked urls enter the seen-set (never re-extracted round after
     # round); fetched-or-blocked is the seen invariant.
-    if robots is not None:
-        blocked = unseen.join(
-            candidates.select("url_hash", "url"), on=["url_hash", "url"], how="left_anti"
-        )
-        seen_delta = batch_seen.unionByName(_to_seen(blocked))
-    else:
-        seen_delta = batch_seen
+    candidates, blocked = robots_split(unseen, robots)
+    if "candidates" in obs:
+        candidates = candidates.observe(obs["candidates"], F.count(F.lit(1)).alias("n"))
+    seen_delta = batch_seen if blocked is None else batch_seen.unionByName(_to_seen(blocked))
 
     # fww is exact here: candidates carry discovered_iter = round_i + 1,
     # strictly greater than every deferred row's, and priority is constant —
@@ -422,7 +406,7 @@ def run_crawl(
     # hashes) are uniform. Restored after the loop; analytics queries keep AQE.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    cached: list[DataFrame] = []  # every probe part the loop persists
+    cached: list[DataFrame] = []  # every frame the loop persists
     try:
         return _run_crawl_loop(
             spark, pages, seeds, cfg, store, robots, cached, fetcher
@@ -431,9 +415,7 @@ def run_crawl(
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         for df in cached:
             df.unpersist()
-        close = getattr(fetcher, "close", None)
-        if close is not None:
-            close()
+        fetcher.close()
 
 
 def _lsm_length_warning(n_parts: int, compact_every: int | None) -> str | None:
@@ -507,6 +489,9 @@ def _run_crawl_loop(
         start_round = latest + 1
     else:
         frontier = seed_frontier(spark, seeds)
+        if robots is not None:  # persisted: lazily, every round-0 write re-gates
+            frontier = robots_gate(frontier, robots).persist()
+            cached.append(frontier)
         seen = None
         start_round = 0
 
@@ -570,15 +555,15 @@ def _run_crawl_loop(
                 )
                 probe_n_warned = True
 
-        # only the cosmetic dedup metric rides on observations now; all
-        # load-bearing counts come from the committed snapshot (see below)
+        # only the dedup metric rides on observations; all load-bearing
+        # counts come from the committed snapshot (see below)
         obs = {
             name: Observation(f"{name}_{round_i}")
             for name in ("raw_candidates", "candidates")
         }
         plan = crawl_round(
-            pages, frontier, seen, robots, round_i, cfg, obs,
-            seen_parts=seen_parts, fetcher=fetcher, host_stats=host_stats,
+            pages, frontier, seen_parts, robots, round_i, cfg, obs,
+            fetcher=fetcher, host_stats=host_stats,
         )
         # Shared by several of the commit's concurrent writes, so each is
         # computed once. The racing writes fill these caches lazily: an
@@ -699,13 +684,9 @@ def _run_crawl_loop(
         batch_n = stats["batch"]
         urls_fetched = stats["vertices"]
         n_edges = stats["edges"]
-        # deduped is cosmetic (log only): observation value, never recomputed
-        try:
-            n_raw_candidates = int(obs["raw_candidates"].get["n"])
-            n_candidates = int(obs["candidates"].get["n"])
-            urls_deduped = max(0, n_raw_candidates - n_candidates)
-        except Exception:
-            urls_deduped = 0
+        # exact: both observed nodes sit above the round's caches and only on
+        # the streamed side of the writes' joins, so they count every row
+        urls_deduped = int(obs["raw_candidates"].get["n"]) - int(obs["candidates"].get["n"])
         duration = time.monotonic() - t0
 
         pending_totals.append(

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..plans.crawl import CrawlConfig, crawl_round, seed_frontier
 from ..operators.frontier import anti_join_seen, dedup_frontier
+from ..operators.robots import robots_gate
 from ..sources.fetcher import Fetcher
 
 FRONTIER_DDL = (
@@ -105,7 +106,8 @@ def start_crawl_stream(
     dirs = StreamDirs.under(workdir)
     os.makedirs(dirs.frontier, exist_ok=True)
     # the seed list is just the first frontier file
-    seed_frontier(spark, seeds).coalesce(1).write.mode("append").parquet(dirs.frontier)
+    seed = robots_gate(seed_frontier(spark, seeds), robots)
+    seed.coalesce(1).write.mode("append").parquet(dirs.frontier)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         seen = _read_optional(spark, dirs.seen, FRONTIER_DDL)
@@ -124,8 +126,9 @@ def start_crawl_stream(
         # (The probes' own seen scan re-listing is harmless: probing extra
         # just-fetched urls only removes rows that are genuinely seen.)
         frontier = frontier.localCheckpoint(eager=True)
+        probes = [] if seen is None else [seen.select("url_hash", "url")]
         plan = crawl_round(
-            pages, frontier, seen, robots, int(batch_id), cfg, fetcher=fetcher
+            pages, frontier, probes, robots, int(batch_id), cfg, fetcher=fetcher
         )
         parsed = plan.parsed.persist()
         try:

@@ -15,3 +15,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def exact_urls_deduped(spark):
+    """Exact value of round r's logged ``urls_deduped``: the distinct
+    canonical outlinks of the pages round r fetched that are in the seen-set
+    as committed up to round r (seen before, fetched now, or blocked now)."""
+    from pyspark.sql import functions as F
+
+    from fs_crawler_spark.functions.extract import extract_pages
+    from fs_crawler_spark.operators.frontier import frontier_from_links
+    from fs_crawler_spark.sources.checkpoint import CheckpointStore
+
+    def count(pages, checkpoint_dir: str, r: int) -> int:
+        store = CheckpointStore(checkpoint_dir)
+        fetched = pages.join(
+            store.read(spark, r, "vertices").select(F.col("id").alias("url")),
+            "url",
+            "left_semi",
+        )
+        links = extract_pages(fetched).select(F.explode("links").alias("url"))
+        seen = store.read_union(spark, "seen", up_to_round=r)
+        return (
+            frontier_from_links(links, r + 1)
+            .join(seen.select("url_hash", "url"), ["url_hash", "url"], "left_semi")
+            .count()
+        )
+
+    return count

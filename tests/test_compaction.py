@@ -29,7 +29,7 @@ def test_compaction_preserves_seen_and_resume(spark, sf_dir, tmp_path):
     pages.unpersist()
 
 
-def test_robots_blocked_enter_seen(spark, sf_dir, tmp_path):
+def test_robots_blocked_enter_seen(spark, sf_dir, tmp_path, exact_urls_deduped):
     pages = build_pages(spark, sf_dir, limit_docs=60).cache()
     robots = spark.createDataFrame(
         [("hub.example.com", "/doc/3")], "host string, disallow_prefix string"
@@ -45,4 +45,18 @@ def test_robots_blocked_enter_seen(spark, sf_dir, tmp_path):
     assert blocked_fetched == 0
     # seen rows are unique per url
     assert seen.count() == seen.select("url").distinct().count()
+    # the logged dedup metric (seen before, fetched or blocked) is exact
+    log = read_output(spark, d, "crawl_log").filter(F.col("partition_id") == -1)
+    for row in log.collect():
+        r = row["iteration"]
+        assert row["urls_deduped"] == exact_urls_deduped(pages, d, r), r
+    # a blocked seed is gated like a discovered url: never fetched, and
+    # seen only once the crawl discovers it
+    d3 = str(tmp_path / "ckpt3")
+    seeds = [doc_url(0), doc_url(3)]
+    run_crawl(spark, pages, seeds, d3, CrawlConfig(max_rounds=20), robots=robots)
+    for table in ("vertices", "seen"):
+        a = read_output(spark, d, table).collect()
+        b = read_output(spark, d3, table).collect()
+        assert sorted(map(tuple, a)) == sorted(map(tuple, b)), table
     pages.unpersist()

@@ -94,15 +94,20 @@ def test_politeness_budget_respected(spark, sf_dir, tmp_path):
     pages.unpersist()
 
 
-def test_resume_is_identical(spark, pages120, tmp_path):
+@pytest.mark.parametrize("rule", [None, ("hub.example.com", "/doc/3")], ids=["no_robots", "robots"])
+def test_resume_is_identical(spark, pages120, tmp_path, rule):
     full_dir = str(tmp_path / "full")
     resumed_dir = str(tmp_path / "resumed")
     seeds = [doc_url(0)]
+    # with a rule, the resumed rounds' seen deltas carry robots-blocked urls
+    robots = None
+    if rule is not None:
+        robots = spark.createDataFrame([rule], "host string, disallow_prefix string")
 
-    run_crawl(spark, pages120, seeds, full_dir, CrawlConfig(max_rounds=4))
+    run_crawl(spark, pages120, seeds, full_dir, CrawlConfig(max_rounds=4), robots=robots)
     # killed after round 1, then resumed
-    run_crawl(spark, pages120, seeds, resumed_dir, CrawlConfig(max_rounds=2))
-    res2 = run_crawl(spark, pages120, seeds, resumed_dir, CrawlConfig(max_rounds=4))
+    run_crawl(spark, pages120, seeds, resumed_dir, CrawlConfig(max_rounds=2), robots=robots)
+    res2 = run_crawl(spark, pages120, seeds, resumed_dir, CrawlConfig(max_rounds=4), robots=robots)
     assert res2["start_round"] == 2
 
     for table in ("vertices", "edges", "seen"):
@@ -111,7 +116,7 @@ def test_resume_is_identical(spark, pages120, tmp_path):
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect())), table
 
 
-def test_crawl_log_lineage(spark, pages120, tmp_path):
+def test_crawl_log_lineage(spark, pages120, tmp_path, exact_urls_deduped):
     from fs_crawler_spark.sources.checkpoint import CheckpointStore
 
     d = str(tmp_path / "c")
@@ -139,6 +144,9 @@ def test_crawl_log_lineage(spark, pages120, tmp_path):
     by_round = {r["iteration"]: r for r in totals.collect()}
     for r, row in by_round.items():
         assert row["frontier"] == store.read(spark, r, "frontier").count(), r
+    # the logged dedup metric is exact in every round
+    for r, row in by_round.items():
+        assert row["urls_deduped"] == exact_urls_deduped(pages120, d, r), r
     # the budget deferred rows: some round batched less than the frontier
     # the previous round left behind
     assert any(
