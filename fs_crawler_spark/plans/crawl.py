@@ -24,7 +24,9 @@ Scale notes (10^10-URL frontier, 1000 executors):
     url-keyed seen anti-join (bucketed seen-set => storage-partitioned join
     under Iceberg; the parquet store keeps seen as plain per-round deltas,
     which the loop's LSM probe parts re-lay-out on the join keys);
-  * per-round state writes are append-only deltas; nothing rewrites O(seen);
+  * per-round state writes are append-only deltas; nothing rewrites O(seen)
+    in the checkpoint (the loop's cached probe parts merge every few
+    rounds, see MAX_PROBE_PARTS);
   * extraction is Arrow-batched and partition-preserving (no shuffle);
   * lineage is truncated every round by reading state back from the snapshot;
   * round counts (the reference's LOG row, A9) come from one footer-count job
@@ -34,7 +36,6 @@ Scale notes (10^10-URL frontier, 1000 executors):
 
 from __future__ import annotations
 
-import logging
 import time
 from dataclasses import dataclass
 from typing import Any, NamedTuple
@@ -56,8 +57,6 @@ from ..schemas import CRAWL_LOG, UNTYPED_PARENT
 from ..sources.checkpoint import CheckpointStore
 from ..sources.fetcher import CorpusJoinFetcher, Fetcher
 
-logger = logging.getLogger(__name__)
-
 
 @dataclass
 class CrawlConfig:
@@ -71,14 +70,6 @@ class CrawlConfig:
     # clusters where a single phase-1 cell of a hub host would exceed a
     # task's comfortable sort size (cell ~ frontier/host/salt_n rows).
     mode: str = "web"  # "web" (href links) | "persons" (GedcomX-parity JSON)
-    compact_every: int | None = 4  # rewrite seen as one snapshot every K
-    # rounds (Iceberg compaction analog) so read fan-in stays bounded.
-    # Cadence trades O(seen) rewrite volume against LSM probe-chain length
-    # (each chained anti-join is one sorted candidate pass).
-    # Round-6 sf1.0 A/B: 8 -> 4 was worth ~10% of crawl wall here, where
-    # the full-seen rewrite (<= 1M rows) is cheap next to the chain; at a
-    # 10^10-url seen set the rewrite dominates and the cadence should grow
-    # (Iceberg's rewrite_data_files scheduling makes the same trade).
     pages_url_partitioned: bool = False  # caller declares the pages corpus
     # is hash-partitioned/bucketed by url (an Iceberg bucket(N, url) table,
     # or a `.repartition(K, "url").persist()` cache). The fetch join then
@@ -418,22 +409,13 @@ def run_crawl(
         fetcher.close()
 
 
-def _lsm_length_warning(n_parts: int, compact_every: int | None) -> str | None:
-    """Guard message when the LSM seen probe list outgrows the compaction
-    cadence (> 2x ``compact_every``, or a fixed 32 when compaction is off):
-    each chained anti-join is one sorted pass over the candidate set per
-    part, so a silently mis-set ``compact_every`` turns the per-round probe
-    into O(parts) candidate passes with no other symptom than slowness."""
-    bound = 2 * compact_every if compact_every else 32
-    if n_parts > bound:
-        return (
-            f"LSM seen probe list has {n_parts} cached parts (bound {bound}, "
-            f"compact_every={compact_every}): every round now makes "
-            f"{n_parts} sorted anti-join passes over the candidate set. "
-            "Lower compact_every (or check that compaction rounds actually "
-            "commit) to collapse the list."
-        )
-    return None
+# The LSM seen probe list never reaches this many cached parts: the round
+# whose part would make it this long merges every part into one instead.
+# Each part costs one sorted anti-join pass over a round's candidates; each
+# merge re-shuffles the cached seen set once. The round-6 sf1.0 sweep
+# (BENCH/BASELINE.md) measured collapsing the chain every 4 rounds ~10%
+# faster than every 8, credited to the shorter chain.
+MAX_PROBE_PARTS = 4
 
 
 def _run_crawl_loop(
@@ -451,16 +433,16 @@ def _run_crawl_loop(
     # LSM-style seen probe list: each round's committed seen delta is cached
     # pre-partitioned + pre-sorted on the anti-join keys, so the per-round
     # F1 probe never re-shuffles the accumulated seen set (see
-    # anti_join_seen_chain). List length is bounded by the compaction cadence
-    # (a compaction round collapses it to one entry). Parts are DISK_ONLY —
-    # BENCH/BASELINE.md records the cache-eviction storms that rejected
-    # MEMORY_AND_DISK next to a cached pages corpus. Each round's part is
-    # filled by that round's counts job (no job of its own), so the next
-    # round's anti-joins read a populated cache; every part is unpersisted
-    # on exit.
+    # anti_join_seen_chain). The list stays below MAX_PROBE_PARTS: the round
+    # that would reach it merges its delta with every cached part into one
+    # part, read from the cache, so the checkpoint only ever appends. Parts
+    # are DISK_ONLY — BENCH/BASELINE.md records the cache-eviction storms
+    # that rejected MEMORY_AND_DISK next to a cached pages corpus. Each
+    # round's part is filled by that round's counts job (no job of its own),
+    # so the next round's anti-joins read a populated cache; every part is
+    # unpersisted on exit.
     probe_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     seen_parts: list[DataFrame] = []
-    probe_n_warned = False
 
     def _as_part(df: DataFrame, materialize: bool = True) -> DataFrame:
         part = (
@@ -484,15 +466,13 @@ def _run_crawl_loop(
         if rollback is not None:
             rollback()
         frontier = _load_frontier(spark, store, latest)
-        seen = store.read_union(spark, "seen", up_to_round=latest)
-        seen_parts = [_as_part(seen)]
+        seen_parts = [_as_part(store.read_union(spark, "seen", up_to_round=latest))]
         start_round = latest + 1
     else:
         frontier = seed_frontier(spark, seeds)
         if robots is not None:  # persisted: lazily, every round-0 write re-gates
             frontier = robots_gate(frontier, robots).persist()
             cached.append(frontier)
-        seen = None
         start_round = 0
 
     rounds_run = 0
@@ -539,21 +519,6 @@ def _run_crawl_loop(
             urls_in = frontier.count()
         if urls_in == 0:
             break
-        if not probe_n_warned:
-            cur_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            if cur_n != probe_n:
-                # results stay correct, but every cached probe part was laid
-                # out for probe_n partitions — the zero-exchange SMJ chain
-                # silently regains an exchange per link. Surface it.
-                logger.warning(
-                    "spark.sql.shuffle.partitions changed mid-crawl "
-                    "(%d -> %d): LSM seen-probe parts keep their original "
-                    "partitioning, so the chained anti-joins will re-add "
-                    "exchanges until the next compaction round.",
-                    probe_n,
-                    cur_n,
-                )
-                probe_n_warned = True
 
         # only the dedup metric rides on observations; all load-bearing
         # counts come from the committed snapshot (see below)
@@ -604,19 +569,6 @@ def _run_crawl_loop(
             )
             pending_totals = []
 
-        # Periodic seen compaction: write the FULL seen-set this round and
-        # flag it in the manifest, so subsequent read_unions start here.
-        seen_out = plan.seen_delta
-        compacted: list[str] = []
-        compaction_round = bool(
-            cfg.compact_every
-            and seen is not None
-            and (round_i + 1) % cfg.compact_every == 0
-        )
-        if compaction_round:
-            seen_out = seen.unionByName(plan.seen_delta)
-            compacted = ["seen"]
-
         # The commit's 5 concurrent writes are the ONLY actions on the round
         # critical path; they fill every observation as a side effect. The
         # frontier is committed whole every round (the reference swaps its
@@ -625,12 +577,11 @@ def _run_crawl_loop(
             round_i,
             {
                 "frontier": plan.new_frontier,
-                "seen": seen_out,
+                "seen": plan.seen_delta,
                 "vertices": plan.vertices_delta,
                 "edges": plan.edges_delta,
                 "crawl_log": log_parts,
             },
-            compacted=compacted,
             # S9 provenance analog (crawler.py:107-122 .settings file): the
             # full run configuration rides in every snapshot manifest.
             meta={
@@ -654,8 +605,15 @@ def _run_crawl_loop(
         # re-laid-out for the zero-exchange anti-join chain) is built here
         # and MATERIALIZED BY THE COUNTS JOB below — folding what used to
         # be a dedicated per-round cache-fill job (+ scheduling gap) into
-        # the one job the loop already pays.
-        next_part = _as_part(store.read(spark, round_i, "seen"), materialize=False)
+        # the one job the loop already pays. A round whose part would make
+        # the list reach MAX_PROBE_PARTS builds one part from the delta and
+        # every cached part instead (a merge of the LSM levels).
+        delta = store.read(spark, round_i, "seen").select("url_hash", "url")
+        merged = len(seen_parts) + 1 >= MAX_PROBE_PARTS
+        if merged:
+            for p in seen_parts:
+                delta = delta.unionByName(p)
+        next_part = _as_part(delta, materialize=False)
 
         # Loop-control and logged counts come from the COMMITTED parquet —
         # one job for all of them (table count() legs read parquet footers
@@ -710,10 +668,9 @@ def _run_crawl_loop(
             spool.unpersist()
 
         frontier = frontier_next
-        seen = store.read_union(spark, "seen", up_to_round=round_i)
-        # LSM probe-list maintenance: append this round's committed delta;
-        # a compaction round collapses the list to the one full snapshot.
-        if compaction_round:
+        # The merged part was filled from the old parts by the counts job,
+        # so they can go now.
+        if merged:
             for p in seen_parts:
                 p.unpersist()
             # identity-filter (DataFrame __eq__ builds a Column, no `in`)
@@ -721,9 +678,6 @@ def _run_crawl_loop(
             seen_parts = [next_part]
         else:
             seen_parts.append(next_part)
-        lsm_msg = _lsm_length_warning(len(seen_parts), cfg.compact_every)
-        if lsm_msg:
-            logger.warning(lsm_msg)
 
         urls_in = stats["frontier"]
         rounds_run += 1

@@ -9,7 +9,8 @@ same semantics on plain parquet:
   * per round, every table is written to a staging dir and then **atomically
     published** by a directory rename + a MANIFEST.json written last;
   * append-only tables (seen, vertices, edges, crawl_log) are stored as
-    per-round deltas and read as a union — the Iceberg append analog;
+    per-round deltas and read as a union — the Iceberg append analog; no
+    round rewrites them;
   * replace tables (frontier) are stored whole per round;
   * resume state = greatest round with a manifest; a killed run that never
     published round r resumes from r-1 with byte-identical continuation
@@ -52,7 +53,6 @@ class CheckpointStore:
         round_i: int,
         tables: dict[str, DataFrame],
         meta: dict[str, Any] | None = None,
-        compacted: list[str] | None = None,
         snapshot_id: int | None = None,
     ) -> int:
         """Write all tables to staging, then publish atomically. Returns the
@@ -79,9 +79,6 @@ class CheckpointStore:
             "round": round_i,
             "snapshot_id": snapshot_id,
             "tables": sorted(tables),
-            # tables written as a FULL rewrite this round (Iceberg rewrite/
-            # compaction analog): read_union starts here instead of round 0.
-            "compacted": sorted(compacted or []),
             # per-table schema, like an Iceberg table's metadata: reads never
             # depend on parquet schema inference, so an EMPTY delta (e.g. a
             # round whose whole batch was retried writes zero seen rows)
@@ -138,23 +135,29 @@ class CheckpointStore:
         self, spark: SparkSession, name: str, up_to_round: int | None = None
     ) -> DataFrame | None:
         """Union of an append-table's per-round deltas (Iceberg-append analog).
-        If some round committed the table as compacted (a full rewrite), the
-        union starts at the latest such round — bounding read fan-in."""
+
+        Older builds committed some rounds' seen as the WHOLE seen set and
+        listed it under ``compacted`` in the manifest; a union of deltas
+        would repeat those rows, so such a checkpoint is refused, naming the
+        round."""
         rounds = [
             r
             for r in self.committed_rounds()
             if up_to_round is None or r <= up_to_round
         ]
-        start = 0
         for r in rounds:
             if name in self.manifest(r).get("compacted", []):
-                start = r
+                raise ValueError(
+                    f"round {r} under {self.root} committed '{name}' as a full "
+                    "rewrite (compacted, written by an older build); only "
+                    "per-round deltas can be read"
+                )
         # Read per round and union: each round reads with the schema its own
         # manifest recorded.
         dfs = [
             self.read(spark, r, name)
             for r in rounds
-            if r >= start and os.path.exists(os.path.join(self._round_dir(r), name))
+            if os.path.exists(os.path.join(self._round_dir(r), name))
         ]
         if not dfs:
             return None

@@ -10,7 +10,7 @@ protocol can run against either backend:
     iceberg-spark-runtime jar).
   * ``SimulatedIcebergBackend`` — a catalog-free stand-in that reproduces the
     Iceberg *snapshot semantics* the store relies on (documented in the
-    Iceberg spec: append/replace/delete commits form an ordered snapshot log;
+    Iceberg spec: append/replace commits form an ordered snapshot log;
     time-travel reads a table AS OF a snapshot; incremental reads scan the
     appends in ``(start, end]``; rollback discards snapshots after a given
     id) over plain parquet dirs plus a JSON snapshot log. It exists so the
@@ -78,9 +78,6 @@ class SparkIcebergBackend:
         else:
             raise ValueError(f"unknown write mode {mode!r}")
 
-    def delete_all(self, tbl: str) -> None:
-        self.spark.sql(f"DELETE FROM {tbl} WHERE true")
-
     def read(
         self,
         tbl: str,
@@ -109,14 +106,13 @@ class SimulatedIcebergBackend:
 
     Per table (``root/<dotted.table.name>/``):
       * ``log.json`` — ordered snapshot entries ``{id, op, dir}`` with
-        ``op in (append, replace, delete)``, plus the created schema and the
+        ``op in (append, replace)``, plus the created schema and the
         recorded partition spec;
-      * ``s<id>/`` — the rows that snapshot ADDED (append/replace); a delete
-        snapshot adds none.
+      * ``s<id>/`` — the rows that snapshot ADDED.
 
     Reads reconstruct table content exactly as Iceberg's spec defines it:
-    content AT snapshot S = rows of the last replace/delete at-or-before S
-    plus every append after it; incremental ``(start, end]`` = the append
+    content AT snapshot S = rows of the last replace at-or-before S plus
+    every append after it; incremental ``(start, end]`` = the append
     snapshots in that id range. Rollback truncates the log (and removes the
     discarded snapshots' data), which is what
     ``system.rollback_to_snapshot`` does to the table's current state.
@@ -147,15 +143,11 @@ class SimulatedIcebergBackend:
             json.dump(log, f)
         os.rename(tmp, self._log_path(tbl))
 
-    def _add_snapshot(self, tbl: str, log: dict, op: str, df: DataFrame | None) -> int:
+    def _add_snapshot(self, tbl: str, log: dict, op: str, df: DataFrame) -> int:
         sid = log["next_id"]
         log["next_id"] = sid + 1
-        entry = {"id": sid, "op": op, "dir": None}
-        if df is not None:
-            data_dir = os.path.join(self._dir(tbl), f"s{sid}")
-            df.write.mode("overwrite").parquet(data_dir)
-            entry["dir"] = f"s{sid}"
-        log["snapshots"].append(entry)
+        df.write.mode("overwrite").parquet(os.path.join(self._dir(tbl), f"s{sid}"))
+        log["snapshots"].append({"id": sid, "op": op, "dir": f"s{sid}"})
         self._save_log(tbl, log)
         return sid
 
@@ -196,10 +188,6 @@ class SimulatedIcebergBackend:
         log["partition"] = list(bucket) if bucket is not None else None
         self._add_snapshot(tbl, log, "replace", df)
 
-    def delete_all(self, tbl: str) -> None:
-        log = self._log(tbl)
-        self._add_snapshot(tbl, log, "delete", None)
-
     def partition_spec(self, tbl: str):
         """Recorded (n, column) bucket spec, for layout-contract assertions."""
         return self._log(tbl).get("partition")
@@ -222,23 +210,14 @@ class SimulatedIcebergBackend:
         if start is not None:
             hi = end if end is not None else (snaps[-1]["id"] if snaps else -1)
             sel = [s for s in snaps if s["op"] == "append" and start < s["id"] <= hi]
-        else:
-            base = None
-            for i, s in enumerate(snaps):
-                if s["op"] in ("replace", "delete"):
-                    base = i
-            if base is None:
-                sel = [s for s in snaps if s["op"] == "append"]
-            else:
-                sel = ([snaps[base]] if snaps[base]["op"] == "replace" else []) + [
-                    s for s in snaps[base + 1 :] if s["op"] == "append"
-                ]
-        dirs = [
-            os.path.join(self._dir(tbl), s["dir"]) for s in sel if s["dir"] is not None
-        ]
-        if not dirs:
+        else:  # the last replace and every append after it
+            base = max(
+                (i for i, s in enumerate(snaps) if s["op"] == "replace"), default=0
+            )
+            sel = snaps[base:]
+        if not sel:
             return self._empty(log)
-        dfs = [self.spark.read.parquet(d) for d in dirs]
+        dfs = [self.spark.read.parquet(os.path.join(self._dir(tbl), s["dir"])) for s in sel]
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df)
@@ -251,5 +230,4 @@ class SimulatedIcebergBackend:
         log["snapshots"] = keep
         self._save_log(tbl, log)
         for s in dropped:
-            if s["dir"] is not None:
-                shutil.rmtree(os.path.join(self._dir(tbl), s["dir"]), ignore_errors=True)
+            shutil.rmtree(os.path.join(self._dir(tbl), s["dir"]), ignore_errors=True)

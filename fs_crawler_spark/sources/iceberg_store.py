@@ -11,8 +11,11 @@ Mapping:
     the frontier (replace table) is an overwrite commit;
   * the seen table is ``bucket(n_shards, url)``-partitioned — the per-round
     candidates anti-join against it becomes a STORAGE-PARTITIONED JOIN
-    (SPARK-37375): no shuffle of the seen side. The layout is table-level
-    (set when the table is created), so ``commit`` takes no partitioning;
+    (SPARK-37375): no shuffle of the seen side. The layout is table-level:
+    the bucket spec is passed only when the table is created, later rounds
+    plain-append, and ``commit`` takes no partitioning. The crawl never
+    rewrites a table; compacting its small per-round files is table
+    maintenance (``rewrite_data_files``) outside the crawl;
   * a crawl round is committed by appending ONE row to the tiny
     ``{namespace}.round_manifests`` table — written LAST, so a round exists
     iff its manifest row does (the parquet store's MANIFEST.json analog; a
@@ -54,8 +57,7 @@ APPEND_TABLES = ("seen", "vertices", "edges", "crawl_log")
 MANIFEST_TABLE = "round_manifests"
 
 _MANIFEST_SCHEMA = (
-    "round int, snapshot_id long, tables string, compacted string, "
-    "meta string, table_snapshots string"
+    "round int, snapshot_id long, tables string, meta string, table_snapshots string"
 )
 
 
@@ -83,7 +85,6 @@ def encode_manifest(manifest: dict[str, Any]) -> tuple:
         int(manifest["round"]),
         int(manifest["snapshot_id"]),
         json.dumps(sorted(manifest.get("tables", []))),
-        json.dumps(sorted(manifest.get("compacted", []))),
         json.dumps(manifest.get("meta", {})),
         json.dumps(manifest.get("table_snapshots", {})),
     )
@@ -96,7 +97,6 @@ def decode_manifest(row: Any) -> dict[str, Any]:
         "round": int(row["round"]),
         "snapshot_id": int(row["snapshot_id"]),
         "tables": json.loads(row["tables"]),
-        "compacted": json.loads(row["compacted"]),
         "meta": json.loads(row["meta"]),
         "table_snapshots": json.loads(row["table_snapshots"]),
     }
@@ -175,11 +175,12 @@ class IcebergCheckpointStore:
         Iceberg snapshot-id range the round's rows occupy."""
         exists = self._exists(name)
         start = self._last_snapshot_id(name) if exists else -1
-        bucket = (self.n_shards, "url") if name == "seen" else None
         if name in APPEND_TABLES:
             mode = "append" if exists else "create"
         else:  # replace tables (frontier): the round's table is the whole state
             mode = "createOrReplace"
+        # the partition spec is table metadata: set once, when seen is created
+        bucket = (self.n_shards, "url") if name == "seen" and mode == "create" else None
         self.backend.write(self._tbl(name), df, mode, bucket=bucket)
         return start, self._last_snapshot_id(name)
 
@@ -188,28 +189,19 @@ class IcebergCheckpointStore:
         round_i: int,
         tables: dict[str, DataFrame],
         meta: dict[str, Any] | None = None,
-        compacted: list[str] | None = None,
         snapshot_id: int | None = None,
     ) -> int:
         import time
 
         snapshot_id = snapshot_id or time.time_ns()
-        table_snapshots: dict[str, list[int]] = {}
-        for name, df in tables.items():
-            if name in (compacted or []) and self._exists(name):
-                # compaction: the full rewrite REPLACES the table content
-                self.backend.delete_all(self._tbl(name))
-                start = self._last_snapshot_id(name)
-                self.backend.write(self._tbl(name), df, "append")
-                table_snapshots[name] = [start, self._last_snapshot_id(name)]
-            else:
-                table_snapshots[name] = list(self._write_table(name, df))
+        table_snapshots = {
+            name: list(self._write_table(name, df)) for name, df in tables.items()
+        }
         self._append_manifest_row(
             {
                 "round": round_i,
                 "snapshot_id": snapshot_id,
                 "tables": sorted(tables),
-                "compacted": sorted(compacted or []),
                 "meta": meta or {},
                 "table_snapshots": table_snapshots,
             }
@@ -237,7 +229,6 @@ class IcebergCheckpointStore:
                 "round": round_i,
                 "snapshot_id": time.time_ns(),
                 "tables": [name],
-                "compacted": [],
                 "meta": {"amendment": True},
                 "table_snapshots": {name: [start, self._last_snapshot_id(name)]},
             }

@@ -1,4 +1,4 @@
-"""Seen compaction + robots-blocked-enters-seen invariants."""
+"""LSM probe-list merges + robots-blocked-enters-seen invariants."""
 
 from pyspark.sql import functions as F
 
@@ -7,25 +7,42 @@ from fs_crawler_spark.sources.checkpoint import CheckpointStore
 from fs_crawler_spark.sources.corpus import build_pages, doc_url
 
 
-def test_compaction_preserves_seen_and_resume(spark, sf_dir, tmp_path):
+def test_probe_merge_preserves_output_and_resume(spark, sf_dir, tmp_path):
+    """A crawl long enough for the LSM probe list to merge (rounds 3 and 6)
+    commits what the same crawl commits when it is resumed after every round,
+    where each call builds a single probe part from the checkpoint."""
     pages = build_pages(spark, sf_dir, limit_docs=120).cache()
-    plain = str(tmp_path / "plain")
-    comp = str(tmp_path / "comp")
-    run_crawl(spark, pages, [doc_url(0)], plain, CrawlConfig(max_rounds=9, compact_every=None))
-    run_crawl(spark, pages, [doc_url(0)], comp, CrawlConfig(max_rounds=9, compact_every=3))
-    a = sorted(map(tuple, read_output(spark, plain, "seen").collect()))
-    b = sorted(map(tuple, read_output(spark, comp, "seen").collect()))
-    assert a == b
-    # compaction actually happened and read_union starts there
-    store = CheckpointStore(comp)
-    compacted_rounds = [
-        r for r in store.committed_rounds() if "seen" in store.manifest(r)["compacted"]
-    ]
-    assert compacted_rounds, "no compaction round recorded"
-    # resume from a compacted store still works
-    res = run_crawl(spark, pages, [doc_url(0)], comp, CrawlConfig(max_rounds=20, compact_every=3))
-    v = read_output(spark, comp, "vertices")
-    assert v.count() == 120
+    pages.count()
+    robots = spark.createDataFrame(
+        [("hub.example.com", "/doc/3")], "host string, disallow_prefix string"
+    )
+    seeds = [doc_url(0)]
+    whole = str(tmp_path / "whole")
+    stepped = str(tmp_path / "stepped")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+    res = run_crawl(
+        spark, pages, seeds, whole, CrawlConfig(max_rounds=9, host_budget=7), robots=robots
+    )
+    # no probe part (merged or replaced) outlives the call
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
+    assert res["rounds"] >= 7, res  # the list merged at least twice
+    for k in range(1, res["rounds"] + 1):
+        run_crawl(
+            spark, pages, seeds, stepped, CrawlConfig(max_rounds=k, host_budget=7), robots=robots
+        )
+
+    for table, cols in (
+        ("vertices", ("id", "iteration")),
+        ("edges", ("source", "destination", "type", "id")),
+        ("seen", ("url", "url_hash", "host", "discovered_iter")),
+    ):
+        a = read_output(spark, whole, table).select(*cols).collect()
+        b = read_output(spark, stepped, table).select(*cols).collect()
+        assert sorted(map(tuple, a)) == sorted(map(tuple, b)), table
+    # the checkpoint only appends: each seen url sits in exactly one delta
+    store = CheckpointStore(whole)
+    per_round = sum(store.read(spark, r, "seen").count() for r in store.committed_rounds())
+    assert per_round == read_output(spark, whole, "seen").select("url").distinct().count()
     pages.unpersist()
 
 

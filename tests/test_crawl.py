@@ -196,18 +196,26 @@ def _mark_shard_seen(manifest):
     )
 
 
+def _mark_compacted_seen(manifest):
+    manifest["compacted"] = ["seen"]
+
+
 @pytest.mark.parametrize(
     "mark_legacy",
-    [_mark_delta_frontier, _mark_shard_seen],
-    ids=["delta_frontier", "shard_seen"],
+    [_mark_delta_frontier, _mark_shard_seen, _mark_compacted_seen],
+    ids=["delta_frontier", "shard_seen", "compacted_seen"],
 )
 def test_delta_frontier_checkpoint_is_refused(spark, pages120, tmp_path, mark_legacy):
     """Checkpoints of older builds that the current reader would misread are
-    refused by resume and load_frontier, naming the round:
+    refused, naming the round:
       * a delta frontier (manifest ``frontier_full: false``) holds only the
         round's new urls; reading it as the whole frontier drops urls;
       * a shard-partitioned seen table (an extra ``shard`` column) does not
-        union with the plain seen deltas a resumed run writes."""
+        union with the plain seen deltas a resumed run writes;
+      * a compacted seen table (manifest ``compacted: ["seen"]``) holds the
+        whole seen set, so a union of deltas would repeat its rows. Resume
+        and ``read_output`` refuse it; ``load_frontier`` reads only the
+        frontier, which stays correct."""
     import json
     import os
 
@@ -224,5 +232,9 @@ def test_delta_frontier_checkpoint_is_refused(spark, pages120, tmp_path, mark_le
 
     with pytest.raises(ValueError, match="round 1"):
         run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=4))
-    with pytest.raises(ValueError, match="round 1"):
-        load_frontier(spark, d)
+    if mark_legacy is _mark_compacted_seen:
+        with pytest.raises(ValueError, match="round 1"):
+            read_output(spark, d, "seen")
+    else:
+        with pytest.raises(ValueError, match="round 1"):
+            load_frontier(spark, d)

@@ -134,15 +134,3 @@ def test_select_batch_host_stats_hint_matches_computed(spark):
         assert _rows(hinted.batch) == _rows(computed.batch), name
         assert _rows(hinted.deferred) == _rows(computed.deferred), name
         assert (hinted.spool is None) == (computed.spool is None), name
-
-
-def test_lsm_length_warning_bounds():
-    from fs_crawler_spark.plans.crawl import _lsm_length_warning
-
-    # within bound: silent
-    assert _lsm_length_warning(16, compact_every=8) is None
-    assert _lsm_length_warning(32, compact_every=None) is None
-    # past bound: warns with the part count and cadence
-    msg = _lsm_length_warning(17, compact_every=8)
-    assert msg and "17" in msg and "compact_every=8" in msg
-    assert _lsm_length_warning(33, compact_every=None)

@@ -4,8 +4,8 @@ The sandbox has no network (maven DNS does not resolve) and no
 iceberg-spark-runtime jar anywhere on disk, so the real-catalog e2e
 (``test_iceberg_store.py``) stays skipped. This test pins the next-best
 thing: drive ``IcebergCheckpointStore`` through a full lifecycle — create,
-append rounds, seen compaction, post-commit totals append, time-travel /
-incremental / bounded reads, crash-orphan rollback — on a RECORDING backend,
+append rounds, post-commit totals append, time-travel / incremental /
+bounded reads, crash-orphan rollback — on a RECORDING backend,
 then replay the exact recorded call sequence through the REAL
 ``SparkIcebergBackend`` against a fake SparkSession that captures every SQL
 string / writeTo chain / reader-option set. The captured statements are
@@ -50,10 +50,6 @@ class RecordingBackend(SimulatedIcebergBackend):
     def write(self, tbl, df, mode, bucket=None):
         self.calls.append(("write", tbl, mode, bucket))
         return super().write(tbl, df, mode, bucket=bucket)
-
-    def delete_all(self, tbl):
-        self.calls.append(("delete_all", tbl))
-        return super().delete_all(tbl)
 
     def read(self, tbl, snapshot_id=None, start=None, end=None):
         self.calls.append(("read", tbl, snapshot_id, start, end))
@@ -153,8 +149,6 @@ def _replay(calls):
             backend.last_snapshot_id(c[1])
         elif op == "write":
             backend.write(c[1], _FakeDF(fake.stmts), c[2], bucket=c[3])
-        elif op == "delete_all":
-            backend.delete_all(c[1])
         elif op == "read":
             backend.read(c[1], snapshot_id=c[2], start=c[3], end=c[4])
         elif op == "rollback":
@@ -184,18 +178,17 @@ def test_spark_iceberg_backend_dialect_golden(spark, tmp_path):
         meta={"urls_in": 1},
         snapshot_id=101,
     )
-    # round 1: appends + frontier replace + seen compaction (delete+rewrite)
+    # round 1: appends (seen without its bucket spec) + frontier replace
     store.commit(
         1,
         {
             "frontier": tdf("f1"),
-            "seen": tdf("s0", "s1"),
+            "seen": tdf("s1"),
             "vertices": tdf("v1"),
             "edges": tdf("e1"),
             "crawl_log": tdf("l1"),
         },
         meta={"urls_in": 1},
-        compacted=["seen"],
         snapshot_id=102,
     )
     # post-commit totals flush (manifest amendment append)
@@ -224,7 +217,12 @@ def test_spark_iceberg_backend_dialect_golden(spark, tmp_path):
     joined = "\n".join(stmts)
     assert "sql: CREATE NAMESPACE IF NOT EXISTS prod.crawl" in joined
     assert "df.writeTo('prod.crawl.seen').partitionedBy(" in joined
-    assert "sql: DELETE FROM prod.crawl.seen WHERE true" in joined
+    # the crawl never rewrites a table, and a partition spec is set only
+    # when a table is created
+    assert "DELETE FROM" not in joined
+    for s in stmts:
+        if "partitionedBy(" in s:
+            assert s.endswith(".create()"), s
     assert (
         "sql: CALL prod.system.rollback_to_snapshot('prod.crawl.vertices'," in joined
     )

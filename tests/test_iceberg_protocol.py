@@ -1,5 +1,5 @@
 """Iceberg commit-protocol tests, catalog-free: the SimulatedIcebergBackend
-reproduces the snapshot semantics the store relies on (append/replace/delete
+reproduces the snapshot semantics the store relies on (append/replace
 log, time-travel, incremental (start,end] scans, rollback), so the protocol —
 manifest-row-last atomicity, bounded reads (including the time-travel frontier
 read past an orphan overwrite), rollback-on-resume — is pinned by end-to-end runs even though the sandbox has
@@ -45,14 +45,12 @@ def test_simulated_backend_snapshot_semantics(spark, tmp_path):
     assert sorted(r["x"] for r in b.read("t").collect()) == [1, 2, 3]
     assert sorted(r["x"] for r in b.read("t", snapshot_id=1).collect()) == [1, 2]
     assert sorted(r["x"] for r in b.read("t", start=0, end=2).collect()) == [2, 3]
-    # replace supersedes history; delete empties; both keep the log growing
+    # replace supersedes history and keeps the log growing
     b.write("t", df(9), "createOrReplace")  # snapshot 3
     assert [r["x"] for r in b.read("t").collect()] == [9]
     assert sorted(r["x"] for r in b.read("t", snapshot_id=2).collect()) == [1, 2, 3]
-    b.delete_all("t")  # snapshot 4
-    assert b.read("t").count() == 0
-    b.write("t", df(7), "append")  # snapshot 5
-    assert [r["x"] for r in b.read("t").collect()] == [7]
+    b.write("t", df(7), "append")  # snapshot 4
+    assert sorted(r["x"] for r in b.read("t").collect()) == [7, 9]
     # rollback truncates to the given snapshot
     b.rollback("t", 3)
     assert b.last_snapshot_id("t") == 3

@@ -17,19 +17,17 @@ def test_manifest_codec_roundtrip():
         "round": 3,
         "snapshot_id": 123456789,
         "tables": ["vertices", "seen", "edges", "crawl_log", "frontier"],
-        "compacted": ["seen"],
         "meta": {"urls_in": 42, "settings": {"n_shards": 8}},
         "table_snapshots": {"seen": [10, 11], "frontier": [-1, 2]},
     }
     row_tuple = encode_manifest(manifest)
     # decode expects a Row-like mapping; emulate with a dict keyed like the table
-    keys = ("round", "snapshot_id", "tables", "compacted", "meta", "table_snapshots")
+    keys = ("round", "snapshot_id", "tables", "meta", "table_snapshots")
     row = dict(zip(keys, row_tuple))
     out = decode_manifest(row)
     assert out["round"] == 3
     assert out["snapshot_id"] == 123456789
     assert sorted(out["tables"]) == sorted(manifest["tables"])
-    assert out["compacted"] == ["seen"]
     assert out["meta"]["settings"]["n_shards"] == 8
     assert out["table_snapshots"]["seen"] == [10, 11]
 
