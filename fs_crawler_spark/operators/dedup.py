@@ -544,7 +544,6 @@ def simhash_near_dup_pairs(
     blocks: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    kernel: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with simhash hamming distance <= max_hamming.
 
@@ -565,17 +564,11 @@ def simhash_near_dup_pairs(
     """
     assert blocks > max_hamming, "pigeonhole requires blocks > max_hamming"
     # persist: the signature pass is the expensive part; both sides of the
-    # self-join read the cached signatures instead of recomputing.
-    # kernel=True: Arrow-vectorized signatures (default, ~3x);
-    # kernel=False: the pure-Column algebra (kept as the parity oracle).
+    # self-join read the cached signatures instead of recomputing. The
+    # Arrow-vectorized kernel is ~3x the pure-Column ``simhash_blocks``,
+    # which stays as its parity oracle.
     docs = _spread(docs, id_col)
-    if kernel:
-        sh = simhash_blocks_kernel(docs, id_col, text_col, bits, blocks).persist()
-    else:
-        sh = docs.select(
-            F.col(id_col).alias("id"),
-            simhash_blocks(text_col, bits, blocks).alias("shb"),
-        ).persist()
+    sh = simhash_blocks_kernel(docs, id_col, text_col, bits, blocks).persist()
     banded = sh.select(
         "id", "shb", F.posexplode("shb").alias("blk", "val")
     )

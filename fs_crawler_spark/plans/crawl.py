@@ -456,6 +456,12 @@ def _run_crawl_loop(
             part.count()
         return part
 
+    def _release(frames: list[DataFrame]) -> None:
+        for df in frames:
+            df.unpersist()
+        # identity-filter (DataFrame __eq__ builds a Column, no `in`)
+        cached[:] = [c for c in cached if all(c is not f for f in frames)]
+
     latest = store.latest_round()
     if latest is not None:
         # Stores with mutable shared tables (Iceberg) first discard rows a
@@ -534,21 +540,31 @@ def _run_crawl_loop(
         # computed once. The racing writes fill these caches lazily: an
         # eager fill job before the commit lost its A/B (min 52.8 s vs
         # 48.5 s lazy, 32 cores / 100k pages) — the extra job per round
-        # cost more than the block-manager lock waits it saved.
-        parsed = plan.parsed.persist()
-        batch = plan.batch.persist()
-        # the politeness rank-1 pass is shared by the batch path AND the
-        # deferred path (frontier write); pin it so neither recomputes it
-        spool = plan.spool.persist() if plan.spool is not None else None
+        # cost more than the block-manager lock waits it saved. The
+        # politeness rank-1 pass (spool) is shared by the batch path AND the
+        # deferred path (frontier write); pinned so neither recomputes it.
+        # Registered in ``cached``, so a round that raises releases them.
+        round_cached = [
+            df.persist()
+            for df in (plan.parsed, plan.batch, plan.spool)
+            if df is not None
+        ]
+        cached.extend(round_cached)
         snapshot_id = time.time_ns()
 
-        # Per-partition lineage (north_rule): rows per partition of this
-        # round's fetch batch (the politeness-window output layout) —
+        # Per-partition lineage (north_rule): rows per seen-probe partition
+        # of this round's fetch batch — the bucket of the probe parts' hash
+        # partitioning, i.e. the anti-join partition that handled the url —
         # computed DISTRIBUTIVELY as part of the committed crawl_log table,
         # not collect()ed to the driver (round 1 spent one extra blocking
-        # job per round on exactly this).
+        # job per round on exactly this). Keyed on the url, not on
+        # spark_partition_id(), so the rows are identical run to run.
         log_parts = (
-            batch.groupBy(F.spark_partition_id().alias("partition_id"))
+            plan.batch.groupBy(
+                F.pmod(F.hash("url_hash", "url"), F.lit(probe_n)).alias(
+                    "partition_id"
+                )
+            )
             .agg(F.count(F.lit(1)).alias("urls_in"))
             .select(
                 F.lit(round_i).cast("int").alias("iteration"),
@@ -662,19 +678,13 @@ def _run_crawl_loop(
             )
         )
 
-        parsed.unpersist()
-        batch.unpersist()
-        if spool is not None:
-            spool.unpersist()
+        _release(round_cached)
 
         frontier = frontier_next
         # The merged part was filled from the old parts by the counts job,
         # so they can go now.
         if merged:
-            for p in seen_parts:
-                p.unpersist()
-            # identity-filter (DataFrame __eq__ builds a Column, no `in`)
-            cached[:] = [c for c in cached if all(c is not p for p in seen_parts)]
+            _release(seen_parts)
             seen_parts = [next_part]
         else:
             seen_parts.append(next_part)

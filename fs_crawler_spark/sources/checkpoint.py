@@ -136,29 +136,30 @@ class CheckpointStore:
     ) -> DataFrame | None:
         """Union of an append-table's per-round deltas (Iceberg-append analog).
 
+        The rounds read are those whose manifest lists ``name`` under
+        ``tables``: a committed round whose table dir is missing raises
+        instead of silently dropping that round's rows.
+
         Older builds committed some rounds' seen as the WHOLE seen set and
         listed it under ``compacted`` in the manifest; a union of deltas
         would repeat those rows, so such a checkpoint is refused, naming the
         round."""
-        rounds = [
-            r
-            for r in self.committed_rounds()
-            if up_to_round is None or r <= up_to_round
-        ]
-        for r in rounds:
-            if name in self.manifest(r).get("compacted", []):
+        rounds = []
+        for r in self.committed_rounds():
+            if up_to_round is not None and r > up_to_round:
+                continue
+            manifest = self.manifest(r)
+            if name in manifest.get("compacted", []):
                 raise ValueError(
                     f"round {r} under {self.root} committed '{name}' as a full "
                     "rewrite (compacted, written by an older build); only "
                     "per-round deltas can be read"
                 )
+            if name in manifest["tables"]:
+                rounds.append(r)
         # Read per round and union: each round reads with the schema its own
         # manifest recorded.
-        dfs = [
-            self.read(spark, r, name)
-            for r in rounds
-            if os.path.exists(os.path.join(self._round_dir(r), name))
-        ]
+        dfs = [self.read(spark, r, name) for r in rounds]
         if not dfs:
             return None
         out = dfs[0]

@@ -115,6 +115,14 @@ def test_resume_is_identical(spark, pages120, tmp_path, rule):
         b = read_output(spark, resumed_dir, table)
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect())), table
 
+    # the per-partition lineage rows are keyed on the url, so they match too
+    # (snapshot_id is a commit timestamp, so it is left out)
+    def lineage(d):
+        log = read_output(spark, d, "crawl_log").filter(F.col("partition_id") >= 0)
+        return sorted(map(tuple, log.select("iteration", "partition_id", "urls_in").collect()))
+
+    assert lineage(full_dir) == lineage(resumed_dir) != []
+
 
 def test_crawl_log_lineage(spark, pages120, tmp_path, exact_urls_deduped):
     from fs_crawler_spark.sources.checkpoint import CheckpointStore
@@ -238,3 +246,20 @@ def test_delta_frontier_checkpoint_is_refused(spark, pages120, tmp_path, mark_le
     else:
         with pytest.raises(ValueError, match="round 1"):
             load_frontier(spark, d)
+
+
+def test_missing_table_dir_of_committed_round_raises(spark, pages120, tmp_path):
+    """A committed round's seen delta that is gone must fail loudly: reading
+    the remaining rounds instead would re-crawl the lost urls on resume and
+    drop them from the output."""
+    import os
+    import shutil
+
+    d = str(tmp_path / "c")
+    run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=2))
+    shutil.rmtree(os.path.join(d, "snapshots", "round=0", "seen"))
+
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        read_output(spark, d, "seen")
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        run_crawl(spark, pages120, [doc_url(0)], d, CrawlConfig(max_rounds=4))

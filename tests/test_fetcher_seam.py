@@ -122,3 +122,25 @@ def test_retry_urls_refetched_next_round_exactly_once(spark, pages60, tmp_path):
             assert it >= base_vertices[url], url
     # seen-set ends complete (every retried url eventually marked seen)
     assert set(hash_of) == set(got)
+
+
+class RaisingFetcher(CorpusJoinFetcher):
+    """Page rows whose html column fails in an executor UDF, so the round's
+    commit raises after the loop persisted that round's frames."""
+
+    def fetch(self, batch):
+        @F.udf("binary")
+        def boom(html):
+            raise RuntimeError("fetch failed")
+
+        return super().fetch(batch).withColumn("html", boom("html"))
+
+
+def test_raising_round_releases_its_caches(spark, pages60, tmp_path):
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="fetch failed"):
+        run_crawl(
+            spark, pages60, [doc_url(0)], str(tmp_path / "ck"),
+            CrawlConfig(max_rounds=3), fetcher=RaisingFetcher(pages60),
+        )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
