@@ -8,7 +8,7 @@ re-express every operator as declarative DataFrame algebra so Catalyst/Tungsten
 /AQE pick the physical plan. The engine targets Iceberg tables of
 Common-Crawl-style pages at 10^10-URL-frontier scale; this repo tests on
 local[32] parquet but every operator is written for the 1000-executor case
-(partitioned anti-joins, broadcast hints, salting, advisory bloom pre-filters).
+(partitioned anti-joins, broadcast hints, salting).
 
 Layout:
     schemas        canonical StructTypes (pages, vertices, edges, frontier, ...)
@@ -21,7 +21,6 @@ Layout:
     sources.csv_compat reference-schema CSV exporter/reader
     operators.frontier   seen-set anti-join dedup (F1/F2/F7)
     operators.politeness per-host budget window + skew salting (B1/B3/O5)
-    operators.bloom      sharded advisory bloom pre-filter (§2.9 UDAF-analog)
     operators.robots     robots.txt disallow gate
     operators.graph      resolution rule (A4), horizon counts (A2/A3),
                          validator pivots (A5-A7), hop filter (J6)
@@ -29,6 +28,8 @@ Layout:
     operators.similarity brute-force + LSH-bucketed cosine top-k
     operators.multimodal binary-column decode/feature plumbing (stubbed codecs)
     plans.crawl          crawl_round pure function + resumable driver loop
+    streaming.crawl_stream  continuous crawl: micro-batch N = round N
+    streaming.ingest     landing-dir dedup ingest: micro-batch N = round N
     batching             reference-parity wave partitioning (B1)
 """
 

@@ -48,10 +48,3 @@ def url_hash(canonical_url: Column) -> Column:
     """64-bit key for the seen-set / bucketing (xxhash64, JVM built-in)."""
     return F.xxhash64(canonical_url)
 
-
-def url_shard(hash_col: Column, n_shards: int) -> Column:
-    """Shard id of a url hash: the partition value of streaming ingest's
-    shard-partitioned seen index and the key of the bloom filter's per-shard
-    blobs. Both must use this one function, or ingest's partition pruning
-    would skip the shard a bloom "maybe seen" row actually lives in."""
-    return F.pmod(hash_col, F.lit(n_shards)).cast("int")

@@ -82,14 +82,11 @@ class CrawlConfig:
 
 class RoundPlan(NamedTuple):
     batch: DataFrame
-    deferred: DataFrame
     parsed: DataFrame
     vertices_delta: DataFrame
     edges_delta: DataFrame
     seen_delta: DataFrame
     new_frontier: DataFrame
-    raw_candidates: DataFrame
-    candidates: DataFrame
     spool: DataFrame | None  # politeness rank-1 subplan (persist per round)
 
 
@@ -355,14 +352,11 @@ def crawl_round(
 
     return RoundPlan(
         batch,
-        deferred,
         parsed,
         vertices_delta,
         edges_delta,
         seen_delta,
         new_frontier,
-        raw_candidates,
-        candidates,
         spool,
     )
 

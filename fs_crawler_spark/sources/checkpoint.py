@@ -31,7 +31,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-APPEND_TABLES = ("seen", "vertices", "edges", "crawl_log")
 MANIFEST = "MANIFEST.json"
 
 

@@ -78,9 +78,11 @@ def start_crawl_stream(
     store = CheckpointStore(workdir)
     frontier_dir = os.path.join(workdir, "frontier_in")
     os.makedirs(frontier_dir, exist_ok=True)
-    # the seed list is just the first frontier file
-    seed = robots_gate(seed_frontier(spark, seeds), robots)
-    seed.coalesce(1).write.mode("append").parquet(frontier_dir)
+    # the seed list is just the first frontier file; a restart finds the
+    # source's files in place and writes no second one
+    if not os.listdir(frontier_dir):
+        seed = robots_gate(seed_frontier(spark, seeds), robots)
+        seed.coalesce(1).write.mode("append").parquet(frontier_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         seen = store.read_union(spark, "seen", up_to_round=batch_id - 1)

@@ -114,6 +114,20 @@ def test_replayed_batch_commits_once(spark, sf_dir, tmp_path):
     assert len(set(r[0] for r in after["seen"])) == len(after["seen"]) == 60
 
 
+def test_restarted_finished_stream_commits_nothing(spark, sf_dir, tmp_path):
+    """Restarting a stream that crawled to exhaustion writes no second seed
+    file, so it runs no micro-batch and commits no empty round."""
+    pages = build_pages(spark, sf_dir, limit_docs=60).cache()
+    cfg = CrawlConfig(max_rounds=40, host_budget=None)
+    sdir = str(tmp_path / "stream")
+    _run_stream(spark, pages, [doc_url(0)], sdir, cfg)
+    store = CheckpointStore(sdir)
+    last = store.latest_round()
+
+    _run_stream(spark, pages, [doc_url(0)], sdir, cfg)
+    assert store.latest_round() == last
+
+
 def test_stream_refuses_legacy_workdir(spark, tmp_path):
     """A workdir of the older stream layout (raw append dirs, seen/ among
     them) is refused rather than crawled again from the seeds."""

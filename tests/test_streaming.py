@@ -1,15 +1,24 @@
 """Streaming ingest: micro-batch dedup-append shares batch dedup semantics."""
 
-import pytest
+import os
+import shutil
 
+import pytest
+from pyspark.sql import functions as F
+
+from fs_crawler_spark.plans.crawl import read_output
+from fs_crawler_spark.schemas import PAGES
+from fs_crawler_spark.sources.checkpoint import CheckpointStore
 from fs_crawler_spark.sources.corpus import build_pages
 from fs_crawler_spark.streaming.ingest import (
     ingest_batch,
-    load_bloom,
-    read_ingested,
     read_pages_stream,
     start_dedup_ingest,
 )
+
+
+def _doc():
+    return F.regexp_extract(F.col("url"), r"/doc/(\d+)$", 1).cast("long")
 
 
 @pytest.mark.slow
@@ -17,98 +26,103 @@ def test_stream_dedup_ingest(spark, sf_dir, tmp_path):
     landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
+    store = CheckpointStore(out)
+
+    def drop_and_drain(df):
+        df.write.mode("append").parquet(landing)
+        q = start_dedup_ingest(read_pages_stream(spark, landing), out, ckpt)
+        q.awaitTermination(120)
 
     pages = build_pages(spark, sf_dir, limit_docs=60)
     # two overlapping drops: 0-39, then 20-59 (20-39 are late duplicates)
-    from pyspark.sql import functions as F
+    drop_and_drain(pages.filter(_doc() < 40))
+    drop_and_drain(pages.filter(_doc() >= 20))
 
-    doc = F.regexp_extract(F.col("url"), r"/doc/(\d+)$", 1).cast("long")
-    pages.filter(doc < 40).write.mode("append").parquet(landing)
-
-    q = start_dedup_ingest(read_pages_stream(spark, landing), out, ckpt)
-    q.awaitTermination(120)
-
-    pages.filter(doc >= 20).write.mode("append").parquet(landing)
-    q2 = start_dedup_ingest(read_pages_stream(spark, landing), out, ckpt)
-    q2.awaitTermination(120)
-
-    ingested = read_ingested(spark, out)
+    ingested = read_output(spark, out, "pages")
     assert ingested.count() == 60  # overlap deduplicated
     assert ingested.select("url").distinct().count() == 60
+    # the seen delta is the compact probe side: keys only, never payloads
+    seen = read_output(spark, out, "seen")
+    assert seen.columns == ["url_hash", "url"] and seen.count() == 60
 
-    # bounded-dedup state: compact shard-partitioned seen INDEX (2 columns,
-    # never the page payloads) + the bloom blob table — per-batch dedup reads
-    # these, not the whole output table
-    import glob
-
-    seen_idx = read_ingested(spark, out, "seen")
-    assert seen_idx.count() == 60
-    assert {"url_hash", "url", "shard"} <= set(seen_idx.columns)
-    # per-batch overwrite dirs with shard pruning inside (replay-idempotent)
-    assert glob.glob(f"{out}/seen/batch=*/shard=*")
-    blobs = load_bloom(spark, out)
-    assert blobs is not None and blobs.count() > 0
-    # every ingested url must probe maybe_seen (no false negatives) so a
-    # re-drop of the same files would dedup to zero
-    from fs_crawler_spark.operators.bloom import bloom_prefilter
-
-    flags = bloom_prefilter(seen_idx.select("url_hash", "url"), blobs, n_shards=32)
-    assert flags.filter(~F.col("maybe_seen")).count() == 0
+    # a drop that only repeats ingested urls commits rounds with 0 pages
+    last = store.latest_round()
+    drop_and_drain(pages)
+    new_rounds = [r for r in store.committed_rounds() if r > last]
+    assert new_rounds
+    assert [store.read(spark, r, "pages").count() for r in new_rounds] == [
+        0
+    ] * len(new_rounds)
+    assert read_output(spark, out, "pages").count() == 60
 
 
 @pytest.mark.slow
 def test_ingest_batch_replay_idempotent(spark, sf_dir, tmp_path):
-    """Crash/replay windows (round-2 advisory): a replayed batch — whether it
-    fully committed (marker present) or crashed mid-commit (deltas written,
-    marker absent) — never appends duplicate pages, and a missing bloom blob
-    never disables dedup (rebuilt from the seen index)."""
-    import json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
+    """A replayed batch, whether its round committed or crashed before its
+    manifest, reads the seen rounds below it, recomputes the same rows and
+    overwrites its round: it never appends duplicate pages."""
     out = str(tmp_path / "out")
+    store = CheckpointStore(out)
     pages = build_pages(spark, sf_dir, limit_docs=60)
-    doc = F.regexp_extract(F.col("url"), r"/doc/(\d+)$", 1).cast("long")
-    first = pages.filter(doc < 40)
+    first = pages.filter(_doc() < 40)
+
+    def ingested():
+        df = read_output(spark, out, "pages")
+        return df.count(), df.select("url").distinct().count()
 
     ingest_batch(first, 0, out)
-    assert read_ingested(spark, out).count() == 40
+    assert ingested() == (40, 40)
 
-    # replay of a FULLY COMMITTED batch: marker names it -> no-op
+    # replay of a committed batch
     ingest_batch(first, 0, out)
-    assert read_ingested(spark, out).count() == 40
+    assert ingested() == (40, 40)
 
-    # crash-mid-commit replay: deltas written but marker rolled back
-    marker_path = os.path.join(out, "_ingest_commit.json")
-    with open(marker_path) as f:
-        saved = json.load(f)
-    os.remove(marker_path)
-    ingest_batch(first, 0, out)  # re-runs batch 0, overwriting its own dirs
-    assert read_ingested(spark, out).count() == 40
-    assert read_ingested(spark, out).select("url").distinct().count() == 40
+    # crash-mid-commit replay: round written, manifest lost
+    os.remove(os.path.join(out, "snapshots", "round=0", "MANIFEST.json"))
+    assert store.committed_rounds() == []
+    ingest_batch(first, 0, out)
+    assert store.committed_rounds() == [0]
+    assert ingested() == (40, 40)
 
-    # missing bloom must NOT disable dedup: batch 1 overlaps 20-59
-    with open(marker_path) as f:
-        saved = json.load(f)
-    shutil.rmtree(os.path.join(out, "bloom"), ignore_errors=True)
-    ingest_batch(pages.filter(doc >= 20), 1, out)
-    assert read_ingested(spark, out).count() == 60
-    assert read_ingested(spark, out).select("url").distinct().count() == 60
-    # bloom was rebuilt and republished under the new marker
-    assert load_bloom(spark, out) is not None
-    # ...and the republished bloom must contain the REBUILT history, not just
-    # batch 1's urls (round-3 advisory): a following batch overlapping the
-    # pre-loss urls 0-39 must still dedup to zero via the bloom -> exact path
+    # batch 1 overlaps 20-39
+    ingest_batch(pages.filter(_doc() >= 20), 1, out)
+    assert store.read(spark, 1, "pages").count() == 20
+    assert ingested() == (60, 60)
+
+    # a batch that only repeats earlier urls commits 0 pages
     ingest_batch(pages, 2, out)
-    assert read_ingested(spark, out).count() == 60
-    assert read_ingested(spark, out).select("url").distinct().count() == 60
-    # GC retention-of-1: the version the previous marker named survives the
-    # swap (a concurrent reader on the old marker keeps its blobs); older
-    # versions are collected
-    versions = sorted(os.listdir(os.path.join(out, "bloom")))
-    assert versions == ["v1", "v2"]
+    assert store.read(spark, 2, "pages").count() == 0
+    assert ingested() == (60, 60)
+
+    # a committed round's lost seen delta fails loudly instead of
+    # re-ingesting its urls
+    shutil.rmtree(os.path.join(out, "snapshots", "round=0", "seen"))
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        ingest_batch(pages, 3, out)
+
+    # an out_dir of the older marker-based layout is refused
+    legacy = tmp_path / "legacy"
+    legacy.mkdir()
+    (legacy / "_ingest_commit.json").write_text('{"batch_id": 0}')
+    with pytest.raises(ValueError, match="_ingest_commit.json"):
+        ingest_batch(first, 1, str(legacy))
+    assert not os.path.exists(legacy / "snapshots")
+
+
+def test_ingest_batch_winner_is_input_order_free(spark, tmp_path):
+    """Two captures of one url with equal warc_ts: the kept capture is the
+    same whichever order the batch holds them in."""
+    import datetime as dt
+
+    ts = dt.datetime(2025, 1, 1)
+    one = ("https://h.example.com/p", ts, b"<p>one</p>", "one", "en")
+    two = ("https://h.example.com/p", ts, b"<p>two</p>", "two", "en")
+    kept = []
+    for i, rows in enumerate(([one, two], [two, one])):
+        out = str(tmp_path / f"out{i}")
+        ingest_batch(spark.createDataFrame(rows, PAGES).coalesce(1), 0, out)
+        kept.append([r["text"] for r in read_output(spark, out, "pages").collect()])
+    assert kept == [["one"], ["one"]]
 
 
 @pytest.mark.slow
