@@ -130,17 +130,3 @@ def merge_frontier(deferred: DataFrame, fresh: DataFrame) -> DataFrame:
     first-write-wins per url."""
     return dedup_frontier(deferred.unionByName(fresh))
 
-
-def merge_frontier_fww(deferred: DataFrame, fresh: DataFrame) -> DataFrame:
-    """First-write-wins merge where every ``deferred`` row beats every
-    ``fresh`` duplicate. Exact whenever fresh rows can never win the min()
-    tie-break — true in the crawl loop: fresh candidates carry
-    discovered_iter = round+1, strictly greater than anything already queued,
-    and priority is the shared constant. The groupBy+min over the whole
-    union then collapses to a left-anti of fresh vs deferred: deferred rows
-    pass through UNTOUCHED (no shuffle — only their (url_hash, url) keys
-    ship to the join), and only fresh crosses an exchange full-width. At a
-    budget-constrained frontier deferred ≫ fresh, so the per-round frontier
-    merge drops from O(frontier) to O(new urls) shuffle bytes."""
-    new_rows = fresh.join(deferred.select(*JOIN_KEY), on=JOIN_KEY, how="left_anti")
-    return deferred.unionByName(new_rows.select(*deferred.columns))

@@ -6,11 +6,12 @@ waves, graph mutation, LOG row) becomes one pure-function Spark round:
     frontier --(politeness window O5)--> batch + deferred
     batch  ⋈  pages on url             (the "fetch"; join replaces HTTP GET)
     mapInPandas extract (P1)           -> text + outlinks per fetched page
-    outlinks -> canonicalize/hash (P7) -> anti-join vs seen (F1) -> robots split
-    new frontier = deferred ∪ allowed candidates (first-write-wins)
+    outlinks -> canonicalize/hash (P7) -> anti-join vs seen ∪ frontier (F1)
+             -> robots tag (one broadcast of the crawl's per-host rules)
+    new frontier = deferred ∪ allowed candidates (disjoint by the probe)
     seen += batch ∪ blocked;  vertices/edges/log deltas appended;  ONE commit
 
-``crawl_round`` is a pure function of (pages, frontier, seen, robots) — that,
+``crawl_round`` is a pure function of (pages, frontier, seen, rules) — that,
 plus the atomic per-round snapshot, is what makes a killed run resume with an
 identical crawl ordering (north_rule). The driver loop is the only imperative
 code; every operator inside a round is declarative DataFrame algebra, so
@@ -49,10 +50,9 @@ from ..operators.frontier import (
     as_frontier_rows,
     dedup_frontier,
     frontier_from_links,
-    merge_frontier_fww,
 )
 from ..operators.politeness import select_batch
-from ..operators.robots import robots_gate, robots_split
+from ..operators.robots import robots_rules, robots_tag
 from ..schemas import CRAWL_LOG, UNTYPED_PARENT
 from ..sources.checkpoint import CheckpointStore
 from ..sources.fetcher import CorpusJoinFetcher, Fetcher
@@ -87,7 +87,7 @@ class RoundPlan(NamedTuple):
     edges_delta: DataFrame
     seen_delta: DataFrame
     new_frontier: DataFrame
-    spool: DataFrame | None  # politeness rank-1 subplan (persist per round)
+    shared: list[DataFrame]  # read by >1 commit write; in dependency order
 
 
 def _committed_counts(
@@ -210,7 +210,7 @@ def crawl_round(
     pages: DataFrame,
     frontier: DataFrame,
     seen_parts: list[DataFrame],
-    robots: DataFrame | None,
+    rules: DataFrame | None,
     round_i: int,
     cfg: CrawlConfig,
     observations: dict[str, Observation] | None = None,
@@ -223,8 +223,11 @@ def crawl_round(
     ``host_stats``; the loop piggybacks them on its committed-counts job).
 
     ``seen_parts``: the seen-set as (url_hash, url) probe frames for
-    ``anti_join_seen_chain``, this round's batch appended last (the loop's
-    LSM list of cached, pre-partitioned deltas; ``[]`` if nothing is seen).
+    ``anti_join_seen_chain`` (the loop's LSM list of cached, pre-partitioned
+    deltas; ``[]`` if nothing is seen). The round appends its frontier keys.
+
+    ``rules``: the per-host robots rules (``robots_rules``, built once per
+    crawl by the caller), or None for no robots.
 
     ``fetcher`` overrides the fetch seam (default: inner-join against
     ``pages`` — see sources/fetcher.py). A url the fetcher neither returns
@@ -235,8 +238,8 @@ def crawl_round(
 
     ``observations`` (optional) attaches Observation counters under the keys
     ``raw_candidates`` and ``candidates`` (the dedup metric: candidates
-    before the seen anti-join and after the robots split); they fill during
-    whatever action first executes each node (the snapshot writes).
+    before the seen/frontier anti-join and after the robots gate); they fill
+    during whatever action first executes each node (the snapshot writes).
     """
     obs = observations or {}
     batch, deferred, spool = select_batch(
@@ -250,9 +253,8 @@ def crawl_round(
     retry = fetcher.retry_urls(batch)
     if retry is not None:
         # transient failures re-queue: out of the seen-set, back into the
-        # frontier. fww-merge exactness holds — retry rows keep their
-        # original discovered_iter (<= round_i), still strictly below any
-        # fresh candidate's round_i + 1.
+        # frontier with their original row. They are frontier rows, so the
+        # frontier probe below keeps them out of the new candidates.
         retry = retry.select(*frontier.columns)
         batch_done = batch.join(
             retry.select("url_hash", "url"), on=["url_hash", "url"], how="left_anti"
@@ -326,8 +328,6 @@ def crawl_round(
     def _to_seen(df: DataFrame) -> DataFrame:
         return df.select("url", "url_hash", "host", "discovered_iter")
 
-    batch_seen = _to_seen(batch_done)
-
     raw_candidates = frontier_from_links(
         out_links.select(F.col("raw_url").alias("url")), round_i + 1
     )
@@ -335,20 +335,25 @@ def crawl_round(
         raw_candidates = raw_candidates.observe(
             obs["raw_candidates"], F.count(F.lit(1)).alias("n")
         )
-    probes = [*seen_parts, batch_seen.select("url_hash", "url")]
-    unseen = anti_join_seen_chain(raw_candidates, probes)
+    # Probing the whole frontier (batch ∪ deferred) drops every url already
+    # queued, so the candidates are disjoint from deferred: the new frontier
+    # is a plain union, and a queued url keeps its row (first-write-wins).
+    probes = [*seen_parts, frontier.select("url_hash", "url")]
+    candidates = anti_join_seen_chain(raw_candidates, probes)
+    shared = [df for df in (spool, batch, parsed) if df is not None]
 
     # robots-blocked urls enter the seen-set (never re-extracted round after
-    # round); fetched-or-blocked is the seen invariant.
-    candidates, blocked = robots_split(unseen, robots)
+    # round); fetched-or-blocked is the seen invariant. The frontier and seen
+    # writes both read the tagged frame, so it is shared.
+    seen_delta = _to_seen(batch_done)
+    if rules is not None:
+        tagged = robots_tag(candidates, rules)
+        shared.append(tagged)
+        candidates = tagged.filter("_ok").drop("_ok")
+        seen_delta = seen_delta.unionByName(_to_seen(tagged.filter("NOT _ok")))
     if "candidates" in obs:
         candidates = candidates.observe(obs["candidates"], F.count(F.lit(1)).alias("n"))
-    seen_delta = batch_seen if blocked is None else batch_seen.unionByName(_to_seen(blocked))
-
-    # fww is exact here: candidates carry discovered_iter = round_i + 1,
-    # strictly greater than every deferred row's, and priority is constant —
-    # so the deferred (≫ candidates under a budget) side never re-shuffles.
-    new_frontier = merge_frontier_fww(deferred, candidates)
+    new_frontier = deferred.unionByName(candidates)
 
     return RoundPlan(
         batch,
@@ -357,7 +362,7 @@ def crawl_round(
         edges_delta,
         seen_delta,
         new_frontier,
-        spool,
+        shared,
     )
 
 
@@ -393,8 +398,14 @@ def run_crawl(
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     cached: list[DataFrame] = []  # every frame the loop persists
     try:
+        # The per-host rules are run-constant: aggregated once, filled
+        # lazily by the first write that reads them (no eager count job).
+        rules = None
+        if robots is not None:
+            rules = robots_rules(robots).persist()
+            cached.append(rules)
         return _run_crawl_loop(
-            spark, pages, seeds, cfg, store, robots, cached, fetcher
+            spark, pages, seeds, cfg, store, rules, cached, fetcher
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
@@ -418,7 +429,7 @@ def _run_crawl_loop(
     seeds: list[str],
     cfg: CrawlConfig,
     store: CheckpointStore,
-    robots: DataFrame | None,
+    rules: DataFrame | None,
     cached: list[DataFrame],
     fetcher: Fetcher,
 ) -> dict[str, Any]:
@@ -470,8 +481,8 @@ def _run_crawl_loop(
         start_round = latest + 1
     else:
         frontier = seed_frontier(spark, seeds)
-        if robots is not None:  # persisted: lazily, every round-0 write re-gates
-            frontier = robots_gate(frontier, robots).persist()
+        if rules is not None:  # persisted: lazily, every round-0 write re-gates
+            frontier = robots_tag(frontier, rules).filter("_ok").drop("_ok").persist()
             cached.append(frontier)
         start_round = 0
 
@@ -527,22 +538,17 @@ def _run_crawl_loop(
             for name in ("raw_candidates", "candidates")
         }
         plan = crawl_round(
-            pages, frontier, seen_parts, robots, round_i, cfg, obs,
+            pages, frontier, seen_parts, rules, round_i, cfg, obs,
             fetcher=fetcher, host_stats=host_stats,
         )
-        # Shared by several of the commit's concurrent writes, so each is
-        # computed once. The racing writes fill these caches lazily: an
-        # eager fill job before the commit lost its A/B (min 52.8 s vs
-        # 48.5 s lazy, 32 cores / 100k pages) — the extra job per round
-        # cost more than the block-manager lock waits it saved. The
-        # politeness rank-1 pass (spool) is shared by the batch path AND the
-        # deferred path (frontier write); pinned so neither recomputes it.
+        # Each frame in ``plan.shared`` is read by several of the commit's
+        # concurrent writes. persist() plans a cache over the caches that
+        # exist, so persisting in dependency order makes each cache read the
+        # one below it (``parsed`` reads ``batch``'s, not the politeness
+        # windows). The racing writes fill them lazily: an eager fill job
+        # lost its A/B (min 52.8 s vs 48.5 s lazy, 32 cores / 100k pages).
         # Registered in ``cached``, so a round that raises releases them.
-        round_cached = [
-            df.persist()
-            for df in (plan.parsed, plan.batch, plan.spool)
-            if df is not None
-        ]
+        round_cached = [df.persist() for df in plan.shared]
         cached.extend(round_cached)
         snapshot_id = time.time_ns()
 

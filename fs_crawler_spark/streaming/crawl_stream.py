@@ -47,7 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.frontier import anti_join_seen, dedup_frontier
-from ..operators.robots import robots_gate
+from ..operators.robots import robots_rules, robots_tag
 from ..plans.crawl import CrawlConfig, crawl_round, seed_frontier
 from ..schemas import FRONTIER
 from ..sources.checkpoint import CheckpointStore
@@ -78,10 +78,13 @@ def start_crawl_stream(
     store = CheckpointStore(workdir)
     frontier_dir = os.path.join(workdir, "frontier_in")
     os.makedirs(frontier_dir, exist_ok=True)
+    rules = None if robots is None else robots_rules(robots)
     # the seed list is just the first frontier file; a restart finds the
     # source's files in place and writes no second one
     if not os.listdir(frontier_dir):
-        seed = robots_gate(seed_frontier(spark, seeds), robots)
+        seed = seed_frontier(spark, seeds)
+        if rules is not None:
+            seed = robots_tag(seed, rules).filter("_ok").drop("_ok")
         seed.coalesce(1).write.mode("append").parquet(frontier_dir)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -93,9 +96,10 @@ def start_crawl_stream(
             # this row was written) die here, not in the politeness window
             frontier = anti_join_seen(frontier, probes[0])
         plan = crawl_round(
-            pages, frontier, probes, robots, batch_id, cfg, fetcher=fetcher
+            pages, frontier, probes, rules, batch_id, cfg, fetcher=fetcher
         )
-        parsed = plan.parsed.persist()
+        # in dependency order, as the batch loop does (see run_crawl)
+        shared = [df.persist() for df in plan.shared]
         feedback = plan.new_frontier.persist()
         try:
             # zero-row appends still create files; they would re-trigger
@@ -111,8 +115,8 @@ def start_crawl_stream(
                 },
             )
         finally:
-            feedback.unpersist()
-            parsed.unpersist()
+            for df in (feedback, *shared):
+                df.unpersist()
 
     return (
         spark.readStream.schema(FRONTIER)

@@ -162,6 +162,86 @@ def test_crawl_log_lineage(spark, pages120, tmp_path, exact_urls_deduped):
     )
 
 
+# five hub seeds and a budget of 3 put the hub over budget from round 1 on,
+# while the src hosts stay under it: the mixed politeness shape
+HUB_SEEDS = [doc_url(d) for d in (0, 6, 9, 12, 15)]
+HUB_ROBOTS = ("hub.example.com", "/doc/3")
+
+
+def test_queued_url_keeps_its_deferred_row(spark, pages120, tmp_path, exact_urls_deduped):
+    """A url linked from a page fetched while that url sits deferred keeps
+    its deferred row (discovered_iter included) and appears once in the
+    committed frontier: each round's frontier equals the generic
+    first-write-wins ``merge_frontier(deferred, fresh)``."""
+    from fs_crawler_spark.functions.extract import extract_pages
+    from fs_crawler_spark.operators.frontier import frontier_from_links, merge_frontier
+    from fs_crawler_spark.sources.checkpoint import CheckpointStore
+
+    robots = spark.createDataFrame([HUB_ROBOTS], "host string, disallow_prefix string")
+    d = str(tmp_path / "c")
+    res = run_crawl(
+        spark, pages120, HUB_SEEDS, d, CrawlConfig(max_rounds=8, host_budget=3), robots=robots
+    )
+    store = CheckpointStore(d)
+    keys = ["url_hash", "url"]
+    relinked = 0
+    for r in range(1, res["rounds"]):
+        committed = store.read(spark, r, "frontier")
+        # no retries and no misses here, so the round's seen delta is its
+        # batch plus its blocked urls, and none of the blocked was queued
+        deferred = store.read(spark, r - 1, "frontier").join(
+            store.read(spark, r, "seen").select(*keys), keys, "left_anti"
+        )
+        fetched = pages120.join(
+            store.read(spark, r, "vertices").select(F.col("id").alias("url")), "url", "left_semi"
+        )
+        links = extract_pages(fetched).select(F.explode("links").alias("url"))
+        fresh = frontier_from_links(links, r + 1).join(
+            store.read_union(spark, "seen", up_to_round=r).select(*keys), keys, "left_anti"
+        )
+        want = merge_frontier(deferred, fresh).select(*committed.columns)
+        assert sorted(map(tuple, committed.collect())) == sorted(map(tuple, want.collect())), r
+        assert committed.count() == committed.select("url").distinct().count(), r
+        relinked += fresh.join(deferred.select(*keys), keys, "left_semi").count()
+    assert relinked > 0  # the crawl did link urls while they sat deferred
+    # with a budget and robots rule both active, the dedup metric is exact
+    totals = read_output(spark, d, "crawl_log").filter(F.col("partition_id") == -1)
+    for row in totals.collect():
+        r = row["iteration"]
+        assert row["urls_deduped"] == exact_urls_deduped(pages120, d, r), r
+
+
+def test_round_runs_each_shared_subplan_once(spark, pages120, tmp_path, monkeypatch):
+    """A round in the mixed politeness shape with a robots rule runs at most
+    9 jobs: 5 commit writes, the counts job, the over-budget-host broadcast
+    of the spool and of the batch, and one robots broadcast. Every frame
+    the writes share is computed once, so no write re-runs the politeness
+    windows or the rules aggregate in a broadcast pre-job of its own."""
+    import fs_crawler_spark.plans.crawl as crawl_mod
+
+    tracker = spark.sparkContext.statusTracker()
+    starts, host_stats = {}, {}
+    crawl_round = crawl_mod.crawl_round
+
+    def traced(*args, **kw):
+        starts[args[4]] = max(tracker.getJobIdsForGroup(None), default=-1)
+        host_stats[args[4]] = kw["host_stats"]
+        return crawl_round(*args, **kw)
+
+    monkeypatch.setattr(crawl_mod, "crawl_round", traced)
+    # url-partitioned corpus: the fetch join then shuffles the batch instead
+    # of broadcasting it
+    pages = pages120.repartition(4, "url").persist()
+    robots = spark.createDataFrame([HUB_ROBOTS], "host string, disallow_prefix string")
+    cfg = CrawlConfig(max_rounds=4, host_budget=3, pages_url_partitioned=True)
+    run_crawl(spark, pages, HUB_SEEDS, str(tmp_path / "c"), cfg, robots=robots)
+    pages.unpersist()
+    for r in (1, 2):
+        n_hosts, n_over = host_stats[r]
+        assert 0 < n_over < n_hosts, (r, host_stats[r])  # the mixed shape
+        assert starts[r + 1] - starts[r] <= 9, (r, starts)
+
+
 def test_resume_rederives_lost_totals(spark, pages120, tmp_path):
     """Round r's totals row piggybacks on round r+1's commit; a crash before
     that commit loses it. Resume must re-derive it from committed counts so

@@ -1,9 +1,9 @@
 """Unit equivalence tests for the narrow-shuffle frontier/politeness paths.
 
-The round-4 hot-path rewrites (frontier_from_links DISTINCT dedup,
-merge_frontier_fww anti-join merge, select_batch three-shape politeness)
-must be drop-in equivalent to the generic first-write-wins algebra under
-the crawl loop's invariants. These pin that equivalence row-for-row.
+The hot-path rewrites (frontier_from_links DISTINCT dedup, select_batch
+three-shape politeness) must be drop-in equivalent to the generic
+first-write-wins algebra under the crawl loop's invariants. These pin that
+equivalence row-for-row.
 """
 
 from pyspark.sql import functions as F
@@ -12,8 +12,6 @@ from fs_crawler_spark.operators.frontier import (
     as_frontier_rows,
     dedup_frontier,
     frontier_from_links,
-    merge_frontier,
-    merge_frontier_fww,
 )
 from fs_crawler_spark.operators.politeness import select_batch
 
@@ -42,26 +40,6 @@ def test_frontier_from_links_equals_generic_dedup(spark):
     assert _rows(fast) == _rows(generic)
     # canonicalization actually collapsed the case/port/slash variants
     assert fast.count() == 3
-
-
-def test_merge_fww_equals_generic_when_fresh_is_younger(spark):
-    # crawl-loop invariant: fresh discovered_iter > every deferred row's,
-    # priority constant -> deferred always wins the min() tie-break
-    deferred = frontier_from_links(
-        spark.createDataFrame(
-            [("https://a.example.com/x",), ("https://d.example.com/w",)],
-            "url string",
-        ),
-        discovered_iter=2,
-    )
-    fresh = frontier_from_links(_links(spark), discovered_iter=3)
-    fww = merge_frontier_fww(deferred, fresh)
-    generic = merge_frontier(deferred, fresh)
-    assert _rows(fww) == _rows(generic)
-    # the duplicate url kept the deferred row's discovered_iter
-    kept = {r["url"]: r["discovered_iter"] for r in fww.collect()}
-    assert kept["https://a.example.com/x"] == 2
-    assert kept["https://d.example.com/w"] == 2
 
 
 def _frontier(spark, spec):
