@@ -72,8 +72,9 @@ def select_batch(
 
     ``host_stats=(n_hosts, n_over)`` supplies the two ints from outside and
     skips the eager aggregate entirely — the crawl loop computes them as two
-    extra legs of its per-round committed-counts job (one job instead of
-    two). Standalone callers omit it and pay the one small
+    legs of its boundary stats job, which runs before every round, the
+    first of a fresh or resumed run included. Standalone callers (the
+    streaming crawl among them) omit it and pay the one small
     aggregate; the frontier they pass is either a committed-parquet read or
     a caller-persisted DataFrame, so the job is a map-side-combined count —
     tiny next to the two full broadcast-join passes the blind split always

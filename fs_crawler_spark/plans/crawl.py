@@ -30,9 +30,12 @@ Scale notes (10^10-URL frontier, 1000 executors):
     rounds, see MAX_PROBE_PARTS);
   * extraction is Arrow-batched and partition-preserving (no shuffle);
   * lineage is truncated every round by reading state back from the snapshot;
-  * round counts (the reference's LOG row, A9) come from one footer-count job
-    over the committed tables; only the dedup metric rides on
-    ``DataFrame.observe``, filled during the commit writes.
+  * every number the loop reads before a round — the frontier size, the
+    politeness shape and the round counts of the reference's LOG row (A9) —
+    comes from one boundary stats job (footer counts of the committed
+    tables), run at the fresh start, at resume and after each commit; only
+    the dedup metric rides on ``DataFrame.observe``, filled during the
+    commit writes.
 """
 
 from __future__ import annotations
@@ -90,79 +93,77 @@ class RoundPlan(NamedTuple):
     shared: list[DataFrame]  # read by >1 commit write; in dependency order
 
 
-def _committed_counts(
+def _boundary_stats(
     spark: SparkSession,
-    store,
-    round_i: int,
-    frontier_next: DataFrame | None = None,
-    host_budget: int | None = None,
+    frontier: DataFrame,
+    host_budget: int | None,
+    store=None,
+    round_i: int | None = None,
     materialize: DataFrame | None = None,
 ) -> dict[str, int]:
-    """Exact per-round counts from the committed snapshot in ONE job: a
-    union of per-table count aggregates (parquet footer metadata — no data
-    pages are read). Authoritative where observations can race (see caller).
-    ``batch`` = sum of the committed per-partition lineage rows.
+    """Every number the loop reads before a round, in ONE job: a union of
+    count aggregates, each exploded into (t, n) rows. Called at the fresh
+    start, at resume and after each commit. Exact, unlike the observations
+    (see the caller).
 
-    ``frontier_next``/``host_budget`` (the loop's budgeted path) add one more
-    leg: next round's politeness host stats — (#hosts, #hosts over budget) of
-    the next frontier, exploded into two (t, n) rows off a single scan. This
-    folds select_batch's eager shape-picking aggregate into the SAME job
-    (one job per round instead of two).
+      * ``frontier``: the frontier's row count; with a ``host_budget`` also
+        ``hosts`` and ``over`` (#hosts, #hosts over budget), the politeness
+        shape select_batch would otherwise pick with an aggregate of its own;
+      * with a committed ``round_i``: ``vertices`` and ``edges`` (parquet
+        footer counts — no data pages are read) and, off one scan of that
+        round's crawl_log, ``batch`` (the sum of its lineage rows' urls_in)
+        and ``totals`` (how many of its totals rows it holds);
+      * ``materialize``: one more count over a persisted frame, purely to fill
+        its cache inside this job (the loop's LSM seen-probe part)."""
 
-    ``materialize`` (optional) rides one more count leg over a persisted
-    DataFrame purely to populate its cache inside this job — the loop
-    passes the round's LSM seen-probe part here, which used to cost a
-    dedicated per-round job (+ its scheduling gap)."""
-    legs = []
-    for name in ("vertices", "edges", "frontier"):
-        legs.append(
-            store.read(spark, round_i, name)
-            .groupBy()
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit(name).alias("t"), F.col("n"))
+    def leg(df: DataFrame, **aggs) -> DataFrame:
+        row = df.groupBy().agg(
+            *(F.coalesce(c.cast("long"), F.lit(0).cast("long")).alias(k) for k, c in aggs.items())
         )
-    legs.append(
-        store.read(spark, round_i, "crawl_log")
-        .filter(F.col("partition_id") >= 0)
-        .filter(F.col("iteration") == round_i)
-        .groupBy()
-        .agg(F.coalesce(F.sum("urls_in"), F.lit(0)).alias("n"))
-        .select(F.lit("batch").alias("t"), F.col("n"))
-    )
-    if frontier_next is not None and host_budget is not None:
-        host_counts = frontier_next.groupBy("host").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
+        pairs = [x for k in aggs for x in (F.lit(k), F.col(k))]
+        return row.select(F.explode(F.create_map(*pairs)).alias("t", "n"))
+
+    one = F.count(F.lit(1))
+    legs = [leg(frontier, frontier=one)]
+    if host_budget is not None:
+        per_host = frontier.groupBy("host").agg(one.alias("_n"))
+        legs.append(leg(per_host, hosts=one, over=F.sum((F.col("_n") > host_budget).cast("long"))))
+    if round_i is not None:
+        legs.append(leg(store.read(spark, round_i, "vertices"), vertices=one))
+        legs.append(leg(store.read(spark, round_i, "edges"), edges=one))
+        log = store.read(spark, round_i, "crawl_log").filter(F.col("iteration") == round_i)
         legs.append(
-            host_counts.groupBy()
-            .agg(
-                F.count(F.lit(1)).alias("hosts"),
-                F.coalesce(
-                    F.sum((F.col("_n") > host_budget).cast("long")),
-                    F.lit(0).cast("long"),
-                ).alias("over"),
-            )
-            .select(
-                F.explode(
-                    F.create_map(
-                        F.lit("hosts"),
-                        F.col("hosts"),
-                        F.lit("over"),
-                        F.col("over"),
-                    )
-                ).alias("t", "n")
+            leg(
+                log,
+                batch=F.sum(F.when(F.col("partition_id") >= 0, F.col("urls_in"))),
+                totals=F.sum((F.col("partition_id") == -1).cast("long")),
             )
         )
     if materialize is not None:
-        legs.append(
-            materialize.groupBy()
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("_materialize").alias("t"), F.col("n"))
-        )
+        legs.append(leg(materialize, _materialize=one))
     u = legs[0]
     for df in legs[1:]:
         u = u.unionByName(df)
     return {r["t"]: int(r["n"]) for r in u.collect()}
+
+
+def _totals_row(
+    round_i: int, stats: dict[str, int], duration: float, urls_deduped: int, snapshot_id: int
+) -> tuple:
+    """Round ``round_i``'s crawl_log totals row (``partition_id = -1``) from
+    its boundary stats."""
+    return (
+        round_i,
+        -1,
+        float(duration),
+        stats["vertices"],
+        stats["frontier"],
+        stats["edges"],
+        stats["batch"],
+        stats["vertices"],
+        int(urls_deduped),
+        int(snapshot_id),
+    )
 
 
 def _load_frontier(spark: SparkSession, store, round_i: int) -> DataFrame:
@@ -220,7 +221,7 @@ def crawl_round(
     """One BFS round as a pure function of snapshot state. Lazy except for
     ``select_batch``'s one scalar host-stats job (two ints at plan time,
     picking the politeness shape — skipped entirely when the caller passes
-    ``host_stats``; the loop piggybacks them on its committed-counts job).
+    ``host_stats``; the loop reads them from its boundary stats job).
 
     ``seen_parts``: the seen-set as (url_hash, url) probe frames for
     ``anti_join_seen_chain`` (the loop's LSM list of cached, pre-partitioned
@@ -442,14 +443,15 @@ def _run_crawl_loop(
     # that would reach it merges its delta with every cached part into one
     # part, read from the cache, so the checkpoint only ever appends. Parts
     # are DISK_ONLY — BENCH/BASELINE.md records the cache-eviction storms
-    # that rejected MEMORY_AND_DISK next to a cached pages corpus. Each
-    # round's part is filled by that round's counts job (no job of its own),
-    # so the next round's anti-joins read a populated cache; every part is
-    # unpersisted on exit.
+    # that rejected MEMORY_AND_DISK next to a cached pages corpus. Every part
+    # is filled by the boundary stats job before the round that reads it
+    # (the resume's merged part at start-up, each round's part after its
+    # commit), so no part costs a job of its own; every part is unpersisted
+    # on exit.
     probe_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     seen_parts: list[DataFrame] = []
 
-    def _as_part(df: DataFrame, materialize: bool = True) -> DataFrame:
+    def _as_part(df: DataFrame) -> DataFrame:
         part = (
             df.select("url_hash", "url")
             .repartition(probe_n, "url_hash", "url")
@@ -457,8 +459,6 @@ def _run_crawl_loop(
             .persist(StorageLevel.DISK_ONLY)
         )
         cached.append(part)
-        if materialize:
-            part.count()
         return part
 
     def _release(frames: list[DataFrame]) -> None:
@@ -467,6 +467,13 @@ def _run_crawl_loop(
         # identity-filter (DataFrame __eq__ builds a Column, no `in`)
         cached[:] = [c for c in cached if all(c is not f for f in frames)]
 
+    # Round-total log rows need observation values the commit itself
+    # produces, so round r's totals PIGGYBACK on round r+1's crawl_log write
+    # (zero extra jobs); the final round's totals flush once after the loop.
+    pending_totals: list[tuple] = []
+    # ``stats``: the boundary stats of the state the next round reads — the
+    # one source of its frontier size, politeness shape and (after a
+    # commit) the logged counts.
     latest = store.latest_round()
     if latest is not None:
         # Stores with mutable shared tables (Iceberg) first discard rows a
@@ -478,68 +485,43 @@ def _run_crawl_loop(
             rollback()
         frontier = _load_frontier(spark, store, latest)
         seen_parts = [_as_part(store.read_union(spark, "seen", up_to_round=latest))]
+        stats = _boundary_stats(
+            spark, frontier, cfg.host_budget, store, latest, materialize=seen_parts[0]
+        )
+        if stats["totals"] == 0:
+            # A crash between round `latest`'s commit and the next one loses
+            # exactly that round's totals row (it would have piggybacked on
+            # the next commit). Re-derive it from the committed counts so the
+            # log export never silently skews cumulative counts. Duration and
+            # the dedup metric are unrecoverable -> 0.
+            snapshot_id = store.manifest(latest).get("snapshot_id", 0)
+            pending_totals.append(_totals_row(latest, stats, 0.0, 0, snapshot_id))
         start_round = latest + 1
     else:
         frontier = seed_frontier(spark, seeds)
-        if rules is not None:  # persisted: lazily, every round-0 write re-gates
+        if rules is not None:  # persisted: filled by the stats job below
             frontier = robots_tag(frontier, rules).filter("_ok").drop("_ok").persist()
             cached.append(frontier)
+        stats = _boundary_stats(spark, frontier, cfg.host_budget)
         start_round = 0
 
     rounds_run = 0
     total_fetched = 0
-    urls_in: int | None = None  # carried from the previous round's counts
-    # Round-total log rows need observation values the commit itself
-    # produces, so round r's totals PIGGYBACK on round r+1's crawl_log write
-    # (zero extra jobs); the final round's totals flush once after the loop.
-    pending_totals: list[tuple] = []
-    if latest is not None:
-        # A crash between round `latest`'s commit and the next one loses
-        # exactly that round's totals row (it would have piggybacked on the
-        # next commit). Re-derive it from the committed counts so the log
-        # export never silently skews cumulative counts. Duration and the
-        # dedup metric are unrecoverable -> 0. Every committed round wrote
-        # crawl_log inside its atomic commit, so a failing read is a fault.
-        has_totals = (
-            store.read(spark, latest, "crawl_log")
-            .filter((F.col("partition_id") == -1) & (F.col("iteration") == latest))
-            .limit(1)
-            .count()
-            > 0
-        )
-        if not has_totals:
-            stats = _committed_counts(spark, store, latest)
-            pending_totals.append(
-                (
-                    latest,
-                    -1,
-                    0.0,
-                    int(stats["vertices"]),
-                    int(stats["frontier"]),
-                    int(stats["edges"]),
-                    int(stats["batch"]),
-                    int(stats["vertices"]),
-                    0,
-                    int(store.manifest(latest).get("snapshot_id", 0)),
-                )
-            )
-    host_stats: tuple[int, int] | None = None  # piggybacked on counts job
     for round_i in range(start_round, cfg.max_rounds):
         t0 = time.monotonic()
-        if urls_in is None:
-            urls_in = frontier.count()
-        if urls_in == 0:
+        if stats["frontier"] == 0:
             break
 
         # only the dedup metric rides on observations; all load-bearing
-        # counts come from the committed snapshot (see below)
+        # counts come from the boundary stats
         obs = {
             name: Observation(f"{name}_{round_i}")
             for name in ("raw_candidates", "candidates")
         }
         plan = crawl_round(
             pages, frontier, seen_parts, rules, round_i, cfg, obs,
-            fetcher=fetcher, host_stats=host_stats,
+            fetcher=fetcher,
+            host_stats=(stats["hosts"], stats["over"]) if cfg.host_budget is not None else None,
         )
         # Each frame in ``plan.shared`` is read by several of the commit's
         # concurrent writes. persist() plans a cache over the caches that
@@ -601,7 +583,7 @@ def _run_crawl_loop(
             # S9 provenance analog (crawler.py:107-122 .settings file): the
             # full run configuration rides in every snapshot manifest.
             meta={
-                "urls_in": urls_in,
+                "urls_in": stats["frontier"],
                 "settings": {
                     "max_rounds": cfg.max_rounds,
                     "host_budget": cfg.host_budget,
@@ -615,73 +597,40 @@ def _run_crawl_loop(
         # Next round's frontier (lineage truncation + exact resume
         # equivalence: read back from the committed snapshot, not in-memory
         # lineage).
-        frontier_next = store.read(spark, round_i, "frontier")
+        frontier = store.read(spark, round_i, "frontier")
 
         # Next round's LSM probe part (this round's committed seen delta,
-        # re-laid-out for the zero-exchange anti-join chain) is built here
-        # and MATERIALIZED BY THE COUNTS JOB below — folding what used to
-        # be a dedicated per-round cache-fill job (+ scheduling gap) into
-        # the one job the loop already pays. A round whose part would make
-        # the list reach MAX_PROBE_PARTS builds one part from the delta and
-        # every cached part instead (a merge of the LSM levels).
+        # re-laid-out for the zero-exchange anti-join chain), filled by the
+        # stats job below. A round whose part would make the list reach
+        # MAX_PROBE_PARTS builds one part from the delta and every cached
+        # part instead (a merge of the LSM levels).
         delta = store.read(spark, round_i, "seen").select("url_hash", "url")
         merged = len(seen_parts) + 1 >= MAX_PROBE_PARTS
         if merged:
             for p in seen_parts:
                 delta = delta.unionByName(p)
-        next_part = _as_part(delta, materialize=False)
+        next_part = _as_part(delta)
 
-        # Loop-control and logged counts come from the COMMITTED parquet —
-        # one job for all of them (table count() legs read parquet footers
-        # only; the budgeted path folds in next round's politeness host
-        # stats off one scan of frontier_next). Observations are NOT
-        # authoritative here: with 5 concurrent commit jobs racing to
-        # populate the shared caches, the first-completing job's
-        # CollectMetrics row only covers the partitions ITS tasks computed
-        # (cache hits contribute nothing), so observed counts can
+        # Loop-control and logged counts come from the COMMITTED snapshot.
+        # Observations are NOT authoritative here: with 5 concurrent commit
+        # jobs racing to populate the shared caches, the first-completing
+        # job's CollectMetrics row only covers the partitions ITS tasks
+        # computed (cache hits contribute nothing), so observed counts can
         # undercount nondeterministically — seen in the wild as a run
         # reporting 99,412 of 100,000 fetches and, worse, an early loop exit
         # if the frontier count raced to 0.
-        stats = _committed_counts(
-            spark,
-            store,
-            round_i,
-            frontier_next=frontier_next if cfg.host_budget is not None else None,
-            host_budget=cfg.host_budget,
-            materialize=next_part,
+        stats = _boundary_stats(
+            spark, frontier, cfg.host_budget, store, round_i, materialize=next_part
         )
-        host_stats = (
-            (stats["hosts"], stats["over"])
-            if cfg.host_budget is not None
-            else None
-        )
-        batch_n = stats["batch"]
-        urls_fetched = stats["vertices"]
-        n_edges = stats["edges"]
         # exact: both observed nodes sit above the round's caches and only on
         # the streamed side of the writes' joins, so they count every row
         urls_deduped = int(obs["raw_candidates"].get["n"]) - int(obs["candidates"].get["n"])
-        duration = time.monotonic() - t0
-
         pending_totals.append(
-            (
-                round_i,
-                -1,
-                float(duration),
-                int(urls_fetched),
-                int(stats["frontier"]),
-                int(n_edges),
-                int(batch_n),
-                int(urls_fetched),
-                int(urls_deduped),
-                snapshot_id,
-            )
+            _totals_row(round_i, stats, time.monotonic() - t0, urls_deduped, snapshot_id)
         )
 
         _release(round_cached)
-
-        frontier = frontier_next
-        # The merged part was filled from the old parts by the counts job,
+        # The merged part was filled from the old parts by the stats job,
         # so they can go now.
         if merged:
             _release(seen_parts)
@@ -689,9 +638,8 @@ def _run_crawl_loop(
         else:
             seen_parts.append(next_part)
 
-        urls_in = stats["frontier"]
         rounds_run += 1
-        total_fetched += urls_fetched
+        total_fetched += stats["vertices"]
 
     if pending_totals:
         # flush the final round's totals (one append for the whole run;

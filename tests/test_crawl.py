@@ -242,6 +242,44 @@ def test_round_runs_each_shared_subplan_once(spark, pages120, tmp_path, monkeypa
         assert starts[r + 1] - starts[r] <= 9, (r, starts)
 
 
+def test_boundary_is_one_stats_job(spark, pages120, tmp_path, monkeypatch):
+    """Every number the loop reads before a round comes from one boundary
+    stats job: a resume runs exactly one job before round 1 is planned (the
+    frontier size, the politeness shape, the lost-totals check and the seen
+    probe part's fill all ride on it), and the first round of a fresh or a
+    resumed run gets its host stats from it, like every later round."""
+    import fs_crawler_spark.plans.crawl as crawl_mod
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    calls = {}
+    crawl_round = crawl_mod.crawl_round
+
+    def traced(*args, **kw):
+        calls[args[4]] = (last_job(), kw["host_stats"])
+        return crawl_round(*args, **kw)
+
+    monkeypatch.setattr(crawl_mod, "crawl_round", traced)
+    pages = pages120.repartition(4, "url").persist()
+    robots = spark.createDataFrame([HUB_ROBOTS], "host string, disallow_prefix string")
+    d = str(tmp_path / "c")
+    cfg = CrawlConfig(max_rounds=1, host_budget=3, pages_url_partitioned=True)
+    run_crawl(spark, pages, HUB_SEEDS, d, cfg, robots=robots)
+    assert calls[0][1] is not None
+
+    entry = last_job()
+    cfg = CrawlConfig(max_rounds=2, host_budget=3, pages_url_partitioned=True)
+    res = run_crawl(spark, pages, HUB_SEEDS, d, cfg, robots=robots)
+    pages.unpersist()
+    assert res["start_round"] == 1 and res["rounds"] == 1
+    start, host_stats = calls[1]
+    assert start - entry == 1
+    assert host_stats is not None
+
+
 def test_resume_rederives_lost_totals(spark, pages120, tmp_path):
     """Round r's totals row piggybacks on round r+1's commit; a crash before
     that commit loses it. Resume must re-derive it from committed counts so

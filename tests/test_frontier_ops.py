@@ -96,7 +96,7 @@ def test_select_batch_empty_frontier(spark):
 def test_select_batch_host_stats_hint_matches_computed(spark):
     """Passing precomputed (n_hosts, n_over) must reproduce the computed-
     stats selection exactly in every shape (the crawl loop piggybacks these
-    two ints on its committed-counts job)."""
+    two ints on its boundary stats job)."""
     budget = 3
     shapes = {
         "bypass": ({"a.com": 2, "b.com": 3}, (2, 0)),
